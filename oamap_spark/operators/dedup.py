@@ -246,8 +246,8 @@ def steady_ids_with_arrivals(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
-    """(arr_ids, ids_df) for a steady-state probe: the arrival batch's
+) -> DataFrame:
+    """The ``ids_df`` of a steady-state probe: the arrival batch's
     flagged shingle table (tokenizes ONLY the arrivals) unioned under
     the persisted corpus index reader (``index_df``: an (id, ids)
     parquet scan, flagged ``is_new=False`` here). This assembly was
@@ -260,10 +260,9 @@ def steady_ids_with_arrivals(
     arr_ids = flagged_shingle_ids_table(
         arrivals.withColumn("__nw", F.lit(True)), id_col, text_col, "__nw", n
     )
-    ids_df = index_df.select(
+    return index_df.select(
         "id", F.lit(False).alias("is_new"), "ids"
     ).unionByName(arr_ids)
-    return arr_ids, ids_df
 
 
 def pair_once_from_probe() -> Column:

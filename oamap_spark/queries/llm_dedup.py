@@ -1049,9 +1049,7 @@ def dedup_minhash_incremental_steady(spark: SparkSession, sf_dir: str) -> DataFr
     bands_path = _steady_corpus_bands(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     arrivals = d.where(F.substring("source", 4, 10).cast("int") >= 18)
-    _, ids_df = D.steady_ids_with_arrivals(
-        arrivals, spark.read.parquet(idx_path)
-    )
+    ids_df = D.steady_ids_with_arrivals(arrivals, spark.read.parquet(idx_path))
     return D.minhash_lsh_pairs_incremental(
         None, "doc_id", "text", "__nw", ids_df=ids_df,
         corpus_bands_df=spark.read.parquet(bands_path),

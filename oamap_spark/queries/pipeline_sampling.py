@@ -648,11 +648,13 @@ def dedup_clusters_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
     join for its arrival-touching pairs, and merges those edges into
     the assignment by rep-graph contraction
     (operators/clustering.py:incremental_components_min_id): corpus
-    endpoints collapse to their persisted cluster id, ONE fixpoint
-    runs over the contracted (arrival-batch-sized) graph, and an
-    arrival bridging two old clusters merges them without the corpus
-    graph ever being re-shuffled. Output: (node, cluster_id) for
-    every arrival doc with at least one near-dup edge, where
+    endpoints collapse to their persisted cluster id, the contracted
+    (arrival-batch-sized) graph is collected once and closed by
+    union-find on the driver (a distributed fixpoint only past
+    DRIVER_FINISH_MAX_EDGES), and an arrival bridging two old clusters
+    merges them without the corpus graph ever being re-shuffled.
+    Output: (node, cluster_id) for every arrival doc with at least
+    one near-dup edge, where
     cluster_id is the min id reachable in the FULL graph — the oracle
     replays batch clustering over all documents and restricts to
     arrivals, which is bit-identical because banding is per-document
@@ -661,7 +663,7 @@ def dedup_clusters_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape at 100 TB: corpus text never re-tokenized, corpus
     graph never recomputed; per batch the full-index work is the one
-    streamed band probe; the contraction join and the fixpoint are
+    streamed band probe; the contraction join and the closure are
     sized by the arrival-touched components, not the corpus."""
     from oamap_spark.cache import track
 
@@ -670,15 +672,14 @@ def dedup_clusters_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands_path = _steady_corpus_bands(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     arrivals = d.where(F.substring("source", 4, 10).cast("int") >= 18)
-    _, ids_df = D.steady_ids_with_arrivals(
-        arrivals, spark.read.parquet(idx_path)
-    )
+    ids_df = D.steady_ids_with_arrivals(arrivals, spark.read.parquet(idx_path))
     pairs = D.minhash_lsh_pairs_incremental(
         None, "doc_id", "text", "__nw", ids_df=ids_df,
         corpus_bands_df=spark.read.parquet(bands_path),
     )
-    # two consumers (edge contraction + the node set inside the
-    # operator): persist so the index probe runs once. Caller owns
+    # the operator's bounded collect reads the pairs, and on its
+    # distributed fallback the fixpoint and the node set read them
+    # again: persist so the index probe runs once. Caller owns
     # lifetime (cache.track).
     pairs = track(pairs.select("id_a", "id_b"))
     merged = C.incremental_components_min_id(pairs, asg)
@@ -730,7 +731,7 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 3 slices (not the dedup stream's 4): still multi-batch — batch 2
     # folds against state batch 1 built on batch 0's — but one fewer
-    # CC fixpoint keeps the query inside the census ceiling; the fold
+    # fold keeps the query inside the census ceiling; the fold
     # count is a harness choice, not an operator property
     src = P.staged_documents_slices(spark, sf_dir, n_slices=3)
     index_dir = staging_path("oamap_clu_maint_", "index")
@@ -745,6 +746,10 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     P.foreach_batch_cluster_maintenance(
         stream, spark, index_dir, pairs_dir, asg_dir
     )
-    return spark.read.parquet(
-        os.path.join(asg_dir, f"gen={P.latest_gen(asg_dir)}")
-    )
+    gen = P.latest_gen(asg_dir)
+    if gen is None:
+        raise RuntimeError(
+            f"stream_cluster_maintenance: the stream over {src} wrote no "
+            f"assignment generation under {asg_dir}; no micro-batch ran"
+        )
+    return spark.read.parquet(os.path.join(asg_dir, f"gen={gen}"))

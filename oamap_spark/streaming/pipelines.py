@@ -47,8 +47,15 @@ def stream_shuffle_partitions(spark: SparkSession):
     Batch jobs inside foreachBatch bodies inherit the same setting
     while the stream runs; AQE still coalesces those by size. The
     session value is restored on exit — the driver owns the session.
+    A value that is not a positive integer raises ``ValueError`` before
+    the session is touched.
     """
     n = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+    if not n.strip().isdecimal() or int(n) == 0:
+        raise ValueError(
+            "$SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer "
+            f"(stream shuffle partitions), got {n!r}"
+        )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", n)
     try:

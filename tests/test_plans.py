@@ -793,23 +793,40 @@ def test_ngram_steady_probe_reads_persisted_index(spark, queries):
     ), "md5 inlined into a Filter (InferFiltersFromGenerate trap)"
 
 
-def test_clusters_steady_probes_persisted_state(spark, queries):
+def test_clusters_steady_probes_persisted_state(spark, queries, monkeypatch):
     """dedup_clusters_steady: BOTH pieces of persisted state appear as
     parquet scans — the corpus signature index (shared with the
     minhash steady twin) and the corpus cluster assignment — and the
     only documents scans are arrival-restricted (the cached pair
     probe's tokenize + the output's left-semi id universe; a corpus
     re-tokenize or an in-query corpus re-clustering would add
-    unfiltered scans). The contraction + fixpoint stay JVM-side."""
+    unfiltered scans). The contraction is the operator's one bounded
+    collect, so its plan is read from the frame the driver finish
+    receives; the returned frame joins the finished labels to the
+    arrivals. Neither plan evaluates Python per row."""
+    from oamap_spark.operators import clustering as C
+
+    collected = []
+    finish = C._driver_finish
+
+    def spy(ends, rows):
+        collected.append(ends)
+        return finish(ends, rows)
+
+    monkeypatch.setattr(C, "_driver_finish", spy)
     df = queries["dedup_clusters_steady"](spark, SF_SMOKE)
-    p = audit.plan_string(df)
+    assert len(collected) == 1
+    p = audit.plan_string(collected[0])
+    out = audit.plan_string(df)
     assert "oamap_steady_idx" in p, p[:2000]
     assert "oamap_steady_clusters" in p, p[:2000]
     # r11: the pair probe reads the persisted corpus band table
     # instead of re-signing the corpus index per batch
     assert "oamap_steady_bands" in p, p[:2000]
-    assert p.count("documents.parquet") == 3, p.count("documents.parquet")
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p[:2000]
+    assert p.count("documents.parquet") == 1, p.count("documents.parquet")
+    assert out.count("documents.parquet") == 1, out
+    for plan in (p, out):
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan[:2000]
 
 
 

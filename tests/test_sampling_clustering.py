@@ -379,11 +379,24 @@ def test_apply_components_update_idempotent(spark):
     assert a == b == {(1, 1), (2, 1), (10, 1), (11, 1), (50, 1)}
 
 
-def test_apply_components_update_chained_batches(spark):
+# DRIVER_FINISH_MAX_EDGES values for the incremental family's two
+# paths: the default finishes every test-sized contracted graph on the
+# driver; 0 sends every non-empty batch to the distributed fixpoint
+_FINISH_PATHS = pytest.mark.parametrize(
+    "max_edges",
+    [C.DRIVER_FINISH_MAX_EDGES, 0],
+    ids=["driver", "distributed"],
+)
+
+
+@_FINISH_PATHS
+def test_apply_components_update_chained_batches(spark, monkeypatch, max_edges):
     # two consecutive daily batches: maintain state through the first,
     # merge the second against the UPDATED assignment — final state
     # equals batch CC over all edges at once
     import random
+
+    monkeypatch.setattr(C, "DRIVER_FINISH_MAX_EDGES", max_edges)
 
     rng = random.Random(7)
     e1 = [(rng.randrange(20), rng.randrange(20)) for _ in range(15)]
@@ -453,6 +466,7 @@ def _union_find_min_labels(edges):
     return {n: find(n) for n in parent}
 
 
+@_FINISH_PATHS
 @settings(**_HYP)
 @given(
     tagged=st.lists(
@@ -463,7 +477,10 @@ def _union_find_min_labels(edges):
         max_size=30,
     )
 )
-def test_apply_components_update_matches_union_find(spark, tagged):
+def test_apply_components_update_matches_union_find(
+    spark, monkeypatch, max_edges, tagged
+):
+    monkeypatch.setattr(C, "DRIVER_FINISH_MAX_EDGES", max_edges)
     batches = [[], [], []]
     for a, b, k in tagged:
         if a != b:  # banded detectors never emit self-pairs
@@ -483,6 +500,87 @@ def test_apply_components_update_matches_union_find(spark, tagged):
         )
     got = {(r["node"], r["cluster_id"]) for r in asg.collect()}
     assert got == set(_union_find_min_labels(all_edges).items())
+
+
+def test_incremental_components_fallback_equals_driver_finish(
+    spark, monkeypatch, caplog
+):
+    # the read side on both paths: the distributed fallback and the
+    # driver finish label every node of the batch identically, with
+    # the same column types; the log names the path that ran
+    import logging
+    import random
+
+    caplog.set_level(logging.INFO, logger=C.__name__)
+
+    rng = random.Random(5)
+    corpus = _edges(
+        spark, [(rng.randrange(40), rng.randrange(40)) for _ in range(30)]
+    )
+    arrivals = _edges(
+        spark,
+        [(rng.randrange(40), 100 + rng.randrange(12)) for _ in range(15)]
+        + [(100 + rng.randrange(12), 100 + rng.randrange(12)) for _ in range(5)],
+    )
+    asg = C.connected_components_min_id(corpus)
+    driver = C.incremental_components_min_id(arrivals, asg)
+    monkeypatch.setattr(C, "DRIVER_FINISH_MAX_EDGES", 0)
+    distributed = C.incremental_components_min_id(arrivals, asg)
+    log = caplog.text
+    assert "driver finish over 20 contracted edges" in log, log
+    assert "distributed fixpoint" in log and "converged in" in log, log
+    assert driver.schema.simpleString() == distributed.schema.simpleString()
+    assert sorted(map(tuple, driver.collect())) == sorted(
+        map(tuple, distributed.collect())
+    )
+
+
+def test_apply_components_update_driver_finish_job_count(
+    spark, monkeypatch, tmp_path
+):
+    # a small batch folds in a handful of Spark jobs: the bounded
+    # collect of the contracted edges, the relabel broadcast and the
+    # write — no fixpoint iterations, so no localCheckpoint (the
+    # distributed fixpoint issued ~32-41 jobs for the same fold)
+    import uuid
+
+    asg = C.connected_components_min_id(
+        _edges(spark, [(i, i + 1) for i in range(0, 40, 2)])
+    )
+    out_dir = str(tmp_path)
+    asg.write.mode("overwrite").parquet(f"{out_dir}/asg")
+    asg = spark.read.parquet(f"{out_dir}/asg")
+    batch = _edges(spark, [(1, 500), (500, 10), (20, 21), (600, 601)])
+
+    # the concrete class: the session's frames override the method of
+    # the pyspark.sql.DataFrame base
+    frame_cls = type(asg)
+    checkpoints = []
+    real = frame_cls.localCheckpoint
+
+    def counting(self, *a, **kw):
+        checkpoints.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
+    sc = spark.sparkContext
+    group = f"fold_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        C.apply_components_update(asg, batch).write.mode("overwrite").parquet(
+            f"{out_dir}/out"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert not checkpoints
+    assert 0 < len(jobs) <= 8, jobs
+    got = {
+        (r["node"], r["cluster_id"])
+        for r in spark.read.parquet(f"{out_dir}/out").collect()
+    }
+    assert {(1, 0), (500, 0), (10, 0), (11, 0), (21, 20), (600, 600)} <= got
+    assert len(got) == 40 + 3
 
 
 def test_incremental_entry_points_refuse_all_pairs_edges(spark):

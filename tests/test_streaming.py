@@ -4,6 +4,7 @@ via applyInPandasWithState (the §7.7 'custom stateful op' slot)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from oamap_spark.plans.verify import compare_query
@@ -349,3 +350,38 @@ def test_stream_stream_join_state_stays_bounded(spark, tmp_path):
         f"join state peaked at {peak} of {relevant} view/purchase rows "
         f"— watermarks are not bounding join state: {stats}"
     )
+
+
+@pytest.mark.parametrize("bad", ["abc", "0", "-3", "2.5", ""])
+def test_stream_shuffle_partitions_rejects_non_positive_int(
+    spark, monkeypatch, bad
+):
+    """$SPARK_GRAFT_STREAM_SHUFFLE fails fast with a clear error when
+    it is not a positive integer, and leaves the session untouched."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", bad)
+    with pytest.raises(ValueError, match="positive integer"):
+        with P.stream_shuffle_partitions(spark):
+            pass
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_shuffle_partitions_sets_and_restores(spark, monkeypatch):
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
+    with P.stream_shuffle_partitions(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_cluster_maintenance_without_generation_raises(
+    spark, monkeypatch
+):
+    """A stream that folded no micro-batch leaves no ``gen=<N>``
+    assignment; the query says so instead of reading ``gen=None``."""
+    monkeypatch.setattr(
+        P, "foreach_batch_cluster_maintenance", lambda *a, **k: None
+    )
+    q = entrymod.queries()["stream_cluster_maintenance"]
+    with pytest.raises(RuntimeError, match="wrote no assignment generation"):
+        q(spark, SF_SMOKE)

@@ -116,7 +116,7 @@ def main() -> None:
 
         # daily arm A — incremental maintenance
         t0 = time.perf_counter()
-        _, ids_df = D.steady_ids_with_arrivals(
+        ids_df = D.steady_ids_with_arrivals(
             arrivals, spark.read.parquet(idx), n=N
         )
         new_pairs = cache.track(
