@@ -27,21 +27,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
-class _Tracker:
-    """Holder object for the registry. Deliberately NOT a module-level
-    list: the fingerprint closure walk (queries/fingerprints.py) reprs
-    module-level containers of scalars — an empty list would hash as
-    '[]' in a fresh process but be skipped once it holds DataFrames,
-    making every tracked query's fingerprint depend on runtime cache
-    state (r7 review finding #1, confirmed by repro). An object
-    instance is invisible to the const walk in every state."""
-
-    def __init__(self) -> None:
-        self.lock = threading.Lock()
-        self.frames: list[DataFrame] = []
-
-
-_T = _Tracker()
+_LOCK = threading.Lock()
+_FRAMES: list[DataFrame] = []
 
 
 def track(
@@ -61,8 +48,8 @@ def track(
     serialized storage explicitly via ``level=``; that is a deliberate
     memory-vs-CPU trade to record, not a default."""
     df.persist(level)
-    with _T.lock:
-        _T.frames.append(df)
+    with _LOCK:
+        _FRAMES.append(df)
     return df
 
 
@@ -73,8 +60,8 @@ def sweep(blocking: bool = False) -> int:
     stopped-session failure is swallowed — a real unpersist error on a
     live session propagates (r7 review finding #5: silently
     under-sweeping reintroduces the accumulation this module fixes)."""
-    with _T.lock:
-        frames, _T.frames[:] = list(_T.frames), []
+    with _LOCK:
+        frames, _FRAMES[:] = list(_FRAMES), []
     n = 0
     first_err: Exception | None = None
     for df in frames:
@@ -92,8 +79,8 @@ def sweep(blocking: bool = False) -> int:
                 # so unreachable forever — r7 review finding); every
                 # live-session failure re-enters the registry so a
                 # later sweep can retry it
-                with _T.lock:
-                    _T.frames.append(df)
+                with _LOCK:
+                    _FRAMES.append(df)
                 if first_err is None:
                     first_err = ex
     if first_err is not None:
@@ -102,5 +89,5 @@ def sweep(blocking: bool = False) -> int:
 
 
 def tracked_count() -> int:
-    with _T.lock:
-        return len(_T.frames)
+    with _LOCK:
+        return len(_FRAMES)

@@ -30,40 +30,10 @@ class QuerySpec:
     tags: tuple[str, ...] = ()
     doc: str = ""
     bench: bool = False  # include in bench.py headline set
-    raw_fn: QueryFn | None = None  # unwrapped body (fingerprinting)
     extra: dict = field(default_factory=dict)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
-
-# Driver-window rotation (SURVEY.md §7.1). The correctness driver
-# scores the FIRST 50 entries of ``queries()`` in iteration order. Up
-# to round 4 the window was a hand-pinned name list, which missed an
-# in-round implementation swap (VERDICT r4 "What's wrong #1": simhash32
-# moved to an Arrow UDF after its queries' verdicts). The window is now
-# COMPUTED from per-query source fingerprints recorded in
-# ``verdicts.json`` at each query's last driver verdict
-# (queries/fingerprints.py): changed-since-verdict (or never-verified)
-# queries first in registration order, then everything else
-# oldest-verdict-first. Cached per process — the registry is immutable
-# after import.
-_PRIORITY_CACHE: list[str] | None = None
-
-
-def registration_order() -> list[str]:
-    """Declared names in raw registration (import) order."""
-    return list(_REGISTRY)
-
-
-def _ordered_names() -> list[str]:
-    global _PRIORITY_CACHE
-    if _PRIORITY_CACHE is None:
-        from oamap_spark.queries.fingerprints import compute_priority
-
-        _PRIORITY_CACHE = compute_priority()
-    pri = [n for n in _PRIORITY_CACHE if n in _REGISTRY]
-    seen = set(pri)
-    return pri + [n for n in _REGISTRY if n not in seen]
 
 
 def register(
@@ -85,7 +55,6 @@ def register(
             tags=tags,
             doc=fn.__doc__ or "",
             bench=bench,
-            raw_fn=fn,
         )
         return fn
 
@@ -112,32 +81,21 @@ def name_of(fn) -> str:
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    return {n: _REGISTRY[n] for n in _ordered_names()}
+    return dict(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:
-    return {n: _REGISTRY[n].fn for n in _ordered_names()}
+    return {n: spec.fn for n, spec in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        n: _REGISTRY[n].oracle
-        for n in _ordered_names()
-        if _REGISTRY[n].oracle is not None
+        n: spec.oracle for n, spec in _REGISTRY.items() if spec.oracle is not None
     }
 
 
 def bench_queries() -> dict[str, QueryFn]:
-    """Bench sweep in REGISTRATION order, deliberately NOT the
-    fingerprint-priority order ``queries()`` uses (VERDICT r11 "Next
-    round #3b"): priority ordering rotates the sweep every round, so
-    whichever query lands first after the single warmup absorbs the
-    residual JVM/codegen warmup and the steady family's one-time index
-    staging — in r11 ``dedup_minhash_incremental_steady`` rotated from
-    4th to 1st and posted a 0.23× "regression" the same-code 8-core run
-    contradicted. Pinning to registration order makes round-over-round
-    per-query diffs compare like sweep positions; rotation is only
-    needed for the *correctness* window, which keeps ``_ordered_names``."""
-    return {
-        n: _REGISTRY[n].fn for n in registration_order() if _REGISTRY[n].bench
-    }
+    """The bench headline set, in registration order like every other
+    view of the registry, so round-over-round per-query diffs compare
+    like sweep positions."""
+    return {n: spec.fn for n, spec in _REGISTRY.items() if spec.bench}

@@ -58,11 +58,21 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def positive_int_env(var: str, default: str, what: str) -> int:
+    """Read ``$var`` (``default`` when unset) as a positive integer.
+    Anything else raises ``ValueError`` naming the variable, before a
+    caller passes the value on to Spark."""
+    raw = os.environ.get(var, default)
+    if not raw.strip().isdecimal() or int(raw) == 0:
+        raise ValueError(f"${var} must be a positive integer ({what}), got {raw!r}")
+    return int(raw)
+
+
 def get_spark(app_name: str = "oamap-spark", cpus: int | None = None) -> SparkSession:
     """Build a local session (tests / bench). The production path would
     receive its session from the cluster launcher instead."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = positive_int_env("SPARK_GRAFT_CPUS", "32", "local cores")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

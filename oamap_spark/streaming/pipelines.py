@@ -27,6 +27,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oamap_spark.session import positive_int_env
+
 
 @contextlib.contextmanager
 def stream_shuffle_partitions(spark: SparkSession):
@@ -50,14 +52,9 @@ def stream_shuffle_partitions(spark: SparkSession):
     A value that is not a positive integer raises ``ValueError`` before
     the session is touched.
     """
-    n = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    if not n.strip().isdecimal() or int(n) == 0:
-        raise ValueError(
-            "$SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer "
-            f"(stream shuffle partitions), got {n!r}"
-        )
+    n = positive_int_env("SPARK_GRAFT_STREAM_SHUFFLE", "8", "stream shuffle partitions")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:

@@ -32,7 +32,7 @@ def pytest_configure(config):
 # plan are in, the two full-registry sweeps (~190 s) are not. Keep
 # each entry under ~3 s (measured via --durations) so the tier stays
 # inside 5 minutes including session startup.
-# tests/test_fingerprints.py::test_smoke_tier_nodeids_exist pins that
+# tests/test_driver_contract.py::test_smoke_tier_nodeids_exist pins that
 # every entry still resolves, so a rename cannot silently shrink the
 # tier.
 SMOKE_NODEIDS = frozenset(
@@ -99,8 +99,8 @@ SMOKE_NODEIDS = frozenset(
         "test_sketches.py::test_sketch_table_schema_and_exactness",
         "test_npy.py::test_from_numpy_columns_and_nested",
         "test_staging.py::test_staging_paths_unique_and_tracked",
-        "test_fingerprints.py::test_fingerprints_are_deterministic_and_complete",
-        "test_fingerprints.py::test_smoke_tier_nodeids_exist",
+        "test_driver_contract.py::test_smoke_tier_nodeids_exist",
+        "test_driver_contract.py::test_queries_follow_registration_order",
         "test_metrics.py::test_observed_metrics_ride_the_query",
         "test_curation.py::test_chunks_cover_document_exactly",
         "test_compiler.py::test_arithmetic",
@@ -132,9 +132,9 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    from oamap_spark.session import get_spark
+    from oamap_spark.session import get_spark, positive_int_env
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cpus = positive_int_env("SPARK_GRAFT_CPUS", "8", "local cores")
     s = get_spark("oamap-spark-tests", cpus=cpus)
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -21,6 +21,24 @@ def queries():
     return entrymod.queries()
 
 
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """Each non-streaming query's plan string, or the exception its
+    build raised; built once for both global plan guards (building a
+    streaming query executes the stream)."""
+    from oamap_spark.queries import registry
+
+    plans: dict[str, str | Exception] = {}
+    for name, spec in registry.all_specs().items():
+        if "streaming" in spec.tags:
+            continue
+        try:
+            plans[name] = audit.plan_string(spec.fn(spark, SF_SMOKE))
+        except Exception as ex:  # each guard reports it as a build error
+            plans[name] = ex
+    return plans
+
+
 def test_q5_broadcasts_dimension_tables(spark, queries):
     """region/nation/supplier/customer are O(rows-of-dim) at every SF;
     the 5-way join must broadcast them, never shuffle lineitem against
@@ -154,7 +172,7 @@ def test_scanned_columns_unions_all_scans_in_join(spark, queries):
     assert "l_tax" not in cols, cols
 
 
-def test_no_unexpected_cartesian_products(spark):
+def test_no_unexpected_cartesian_products(registry_plans):
     """Global plan guard: no declared batch query may contain a
     CartesianProduct unless it is an intentionally quadratic form —
     the sf-bounded all-pairs oracle twins, the theta join demo, or a
@@ -169,16 +187,13 @@ def test_no_unexpected_cartesian_products(spark):
         "dedup_simhash_pairs",
         "dedup_embedding_cosine",
     }
+    specs = registry.all_specs()
     offenders = []
-    for name, spec in registry.all_specs().items():
-        if "streaming" in spec.tags:  # building executes the stream
+    for name, plan in registry_plans.items():
+        if name in allowed_names or allowed_tags & set(specs[name].tags):
             continue
-        if name in allowed_names or allowed_tags & set(spec.tags):
-            continue
-        try:
-            plan = audit.plan_string(spec.fn(spark, SF_SMOKE))
-        except Exception as ex:  # building must not fail either
-            offenders.append(f"{name}: build error {ex}")
+        if isinstance(plan, Exception):
+            offenders.append(f"{name}: build error {plan}")
             continue
         if "CartesianProduct" in plan:
             offenders.append(f"{name}: CartesianProduct in plan")
@@ -207,14 +222,12 @@ def test_compiled_nested_loop_stays_jvm_side(spark, queries):
     assert audit.shuffle_count(df) == 1
 
 
-def test_no_python_eval_outside_udf_surface(spark):
+def test_no_python_eval_outside_udf_surface(registry_plans):
     """Global scale guard: no batch query may evaluate Python row code
     (BatchEvalPython / ArrowEvalPython / mapInPandas nodes) unless it
     is a declared UDF-surface demo or an Arrow-vectorized signature
     path — everything else must stay inside whole-stage codegen. This
     is the repo's 'UDFs are the slow path' rule, enforced."""
-    from oamap_spark.queries import registry
-
     # legit Python: the three deliberate UDF-surface demos + the
     # Arrow-batched LSH/IVF signature paths (numpy matmuls, documented)
     allowed_names = {
@@ -244,13 +257,11 @@ def test_no_python_eval_outside_udf_surface(spark):
     }
     markers = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
     offenders = []
-    for name, spec in registry.all_specs().items():
-        if "streaming" in spec.tags or name in allowed_names:
+    for name, plan in registry_plans.items():
+        if name in allowed_names:
             continue
-        try:
-            plan = audit.plan_string(spec.fn(spark, SF_SMOKE))
-        except Exception as ex:
-            offenders.append(f"{name}: build error {ex}")
+        if isinstance(plan, Exception):
+            offenders.append(f"{name}: build error {plan}")
             continue
         hit = [m for m in markers if m in plan]
         if hit:
