@@ -250,13 +250,9 @@ def steady_ids_with_arrivals(
     """The ``ids_df`` of a steady-state probe: the arrival batch's
     flagged shingle table (tokenizes ONLY the arrivals) unioned under
     the persisted corpus index reader (``index_df``: an (id, ids)
-    parquet scan, flagged ``is_new=False`` here). This assembly was
-    copy-pasted at every steady probe site (dedup_clusters_steady,
-    dedup_minhash_incremental_steady, tools/clustering_curve — the r11
-    review's deferred dedup, SCALE.md r12 queue); one body keeps the
-    corpus-never-retokenized contract and the literal is_new flags —
-    which the probes' filters fold, so each half of the union prunes
-    away wherever only one side is consumed — from drifting apart."""
+    parquet scan, flagged ``is_new=False`` here). The is_new flags are
+    literals, which the probes' filters fold, so each half of the
+    union prunes away wherever only one side is consumed."""
     arr_ids = flagged_shingle_ids_table(
         arrivals.withColumn("__nw", F.lit(True)), id_col, text_col, "__nw", n
     )
@@ -305,9 +301,9 @@ def _jaccard_verify(cand: DataFrame, ids_df: DataFrame, threshold: float) -> Dat
 # persisted-bands call site while the probes relied on the function
 # defaults — a default change would silently desync persisted band
 # tables from the probe and drop pairs). Builders of persisted band
-# tables (streaming batch bodies, the steady-state staging helpers)
-# reference these; the pair functions' keyword defaults stay literal
-# (16/2) and tests pin that they agree.
+# tables (the streaming batch body, the steady-state staging) build
+# them with minhash_band_table; the pair functions' keyword defaults
+# stay literal (16/2) and tests pin that they agree.
 MINHASH_K = 16
 BAND_ROWS = 2
 N_BANDS = MINHASH_K // BAND_ROWS
@@ -342,6 +338,17 @@ def _explode_bands(sig_df: DataFrame, n_bands: int, rows_per_band: int) -> DataF
             )
         ).alias("band"),
     ).select(*keep, "band.band_idx", "band.band_key")
+
+
+def minhash_band_table(ids_df: DataFrame) -> DataFrame:
+    """The persisted (id, band_idx, band_key) band table of a shingle-id
+    table (id, ids) in the shared layout: ``MINHASH_K`` minhashes per
+    document exploded into ``N_BANDS`` bands of ``BAND_ROWS``, what the
+    pair probes read as ``corpus_bands_df`` / ``arrival_bands_df``."""
+    sig = ids_df.select(
+        "id", minhash_signature(F.col("ids"), MINHASH_K).alias("sig")
+    )
+    return _explode_bands(sig, N_BANDS, BAND_ROWS)
 
 
 def minhash_lsh_pairs(
@@ -485,7 +492,7 @@ def minhash_lsh_pairs_incremental(
     ``corpus_bands_df``: optionally pass the corpus's PRE-EXPLODED
     band table (id, band_idx, band_key — MUST come from the same
     ``k``/``rows_per_band`` layout over the same shingle ids, e.g.
-    :func:`_explode_bands` over the persisted index). Without it the
+    :func:`minhash_band_table` over the persisted index). Without it the
     probe recomputes the k minhashes over every corpus ids row per
     batch — the surviving O(corpus) CPU term the r11 clustering curve
     measured (0.068 ms/doc/batch); with it the corpus half of the
@@ -994,6 +1001,31 @@ def containment_pairs_incremental(
     )
 
 
+def containment_corpus_tables(
+    corpus_ids: DataFrame, df_cap: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The corpus-side inputs of :func:`containment_pairs_incremental_steady`
+    derived from a shingle-id table (id, ids): postings (id, sid),
+    document frequencies (sid, df) and per-doc stats (id, sz, kc_base),
+    where kc_base counts a doc's postings on sids with df ≤ ``df_cap``
+    as sz minus its over-cap postings (over-cap sids are the
+    boilerplate few, so that join side is small)."""
+    post = corpus_ids.select("id", F.explode("ids").alias("sid"))
+    dfreq = post.groupBy("sid").agg(F.count(F.lit(1)).alias("df"))
+    over = dfreq.where(F.col("df") > df_cap).select("sid")
+    overcap = post.join(over, "sid").groupBy("id").agg(
+        F.count(F.lit(1)).alias("oc")
+    )
+    stats = (
+        corpus_ids.select("id", F.size("ids").alias("sz"))
+        .join(overcap, "id", "left")
+        .select(
+            "id", "sz", (F.col("sz") - F.coalesce("oc", F.lit(0))).alias("kc_base")
+        )
+    )
+    return post, dfreq, stats
+
+
 def containment_pairs_incremental_steady(
     arr_ids: DataFrame,
     corpus_post: DataFrame,
@@ -1038,8 +1070,8 @@ def containment_pairs_incremental_steady(
       equals the batch kc exactly (pinned by the cap-crossing
       property test in tests/test_llm_ops.py).
 
-    ``corpus_stats.kc_base`` MUST have been built with this same
-    ``df_cap``.
+    The corpus tables come from :func:`containment_corpus_tables`, which
+    MUST have been given this same ``df_cap``.
     """
     from oamap_spark.cache import track
 

@@ -24,12 +24,12 @@ from oamap_spark.operators import sampling as S
 # fully imported before this module (queries.__init__._load_all
 # order), so this costs nothing and cannot reorder registration.
 from oamap_spark.queries.llm_dedup import (
-    _steady_corpus_bands,
-    _steady_corpus_index,
+    _steady_minhash_pairs,
     containment_pairs_ctes,
     minhash_pairs_ctes,
 )
 from oamap_spark.queries.registry import register
+from oamap_spark.sources.staging import staged_once, steady_split
 from oamap_spark.sources.tables import load_table
 
 # Shared DuckDB CTE tail: MinHash-LSH pair edges (the banded SCALE
@@ -597,30 +597,19 @@ def mixture_temperature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# persisted corpus CLUSTER ASSIGNMENT, one per (process, sf_dir) —
-# the steady-state clustering query's state: built once per corpus
-# snapshot (banded MinHash pairs over src0-17 resolved to min-id
-# components), then only PROBED by each arrival batch. Same staging
-# discipline as llm_dedup's signature/digest/window indexes
-# (atexit-swept staging_path roots).
-_STEADY_CLUSTERS: dict[str, str] = {}
-
-
-def _steady_cluster_assignment(spark: SparkSession, sf_dir: str) -> str:
-    path = _STEADY_CLUSTERS.get(sf_dir)
-    if path is None:
-        from oamap_spark.sources.staging import staging_path
-
-        d = load_table(spark, sf_dir, "documents")
-        corpus = d.where(F.substring("source", 4, 10).cast("int") < 18)
-        pairs = D.minhash_lsh_pairs(
-            corpus, "doc_id", "text", k=16, rows_per_band=2, threshold=0.9
-        )
-        comp = C.connected_components_min_id(pairs)
-        path = staging_path("oamap_steady_clusters_", "assignment")
-        comp.write.parquet(path)
-        _STEADY_CLUSTERS[sf_dir] = path
-    return path
+def _steady_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's persisted (node, cluster_id) assignment: banded
+    MinHash pairs over the corpus resolved to min-id components, built
+    once per snapshot and only probed by each arrival batch."""
+    return staged_once(
+        spark, sf_dir, "clusters",
+        lambda: C.connected_components_min_id(
+            D.minhash_lsh_pairs(
+                steady_split(load_table(spark, sf_dir, "documents"))[0],
+                "doc_id", "text", k=16, rows_per_band=2, threshold=0.9,
+            )
+        ),
+    )
 
 
 @register(
@@ -667,16 +656,9 @@ def dedup_clusters_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized by the arrival-touched components, not the corpus."""
     from oamap_spark.cache import track
 
-    asg = spark.read.parquet(_steady_cluster_assignment(spark, sf_dir))
-    idx_path = _steady_corpus_index(spark, sf_dir)
-    bands_path = _steady_corpus_bands(spark, sf_dir)
-    d = load_table(spark, sf_dir, "documents")
-    arrivals = d.where(F.substring("source", 4, 10).cast("int") >= 18)
-    ids_df = D.steady_ids_with_arrivals(arrivals, spark.read.parquet(idx_path))
-    pairs = D.minhash_lsh_pairs_incremental(
-        None, "doc_id", "text", "__nw", ids_df=ids_df,
-        corpus_bands_df=spark.read.parquet(bands_path),
-    )
+    asg = _steady_cluster_assignment(spark, sf_dir)
+    _, arrivals = steady_split(load_table(spark, sf_dir, "documents"))
+    pairs = _steady_minhash_pairs(spark, sf_dir, arrivals)
     # the operator's bounded collect reads the pairs, and on its
     # distributed fallback the fixpoint and the node set read them
     # again: persist so the index probe runs once. Caller owns
@@ -746,7 +728,7 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     P.foreach_batch_cluster_maintenance(
         stream, spark, index_dir, pairs_dir, asg_dir
     )
-    gen = P.latest_gen(asg_dir)
+    gen = max(P.partition_ids(asg_dir, "gen"), default=None)
     if gen is None:
         raise RuntimeError(
             f"stream_cluster_maintenance: the stream over {src} wrote no "

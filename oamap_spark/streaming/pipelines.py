@@ -363,36 +363,17 @@ def staged_documents_slices(
     return out
 
 
-def latest_gen(asg_dir: str, below: int | None = None) -> int | None:
-    """Largest ``gen=<N>`` partition id under ``asg_dir`` (optionally
-    strictly below ``below`` — the replay-idempotency restriction), or
-    None when no generation exists. Filesystem listing only, no Spark
-    job. One body for the parsing that was duplicated between the
-    maintenance batch fold and the query-side readback (r11 review,
-    SCALE.md r12 queue)."""
+def partition_ids(d: str, key: str, below: int | None = None) -> set[int]:
+    """The ids N of the ``<key>=N`` partitions under ``d`` (optionally
+    only those strictly below ``below``, the replay-idempotency
+    restriction): a filesystem listing, no Spark job."""
     import glob
 
-    gens = [
+    ids = {
         int(os.path.basename(p).split("=")[1])
-        for p in glob.glob(os.path.join(asg_dir, "gen=*"))
-    ]
-    if below is not None:
-        gens = [g for g in gens if g < below]
-    return max(gens) if gens else None
-
-
-def _batch_partitions(d: str, below: int) -> set[int]:
-    """Batch ids of the ``batch=<id>`` partitions present under ``d``
-    that are strictly below ``below`` — a filesystem listing, no Spark
-    job. Used to validate that the accumulated band table COVERS the
-    ids index before trusting it (ADVICE r11 high)."""
-    import glob
-
-    return {
-        int(os.path.basename(p).split("=")[1])
-        for p in glob.glob(os.path.join(d, "batch=*"))
-        if int(os.path.basename(p).split("=")[1]) < below
+        for p in glob.glob(os.path.join(d, f"{key}=*"))
     }
+    return ids if below is None else {i for i in ids if i < below}
 
 
 def incremental_dedup_batch_body(
@@ -407,13 +388,9 @@ def incremental_dedup_batch_body(
 
     from oamap_spark.cache import track
     from oamap_spark.operators.dedup import (
-        BAND_ROWS,
-        MINHASH_K,
-        N_BANDS,
-        _explode_bands,
         flagged_shingle_ids_table,
+        minhash_band_table,
         minhash_lsh_pairs_incremental,
-        minhash_signature,
     )
 
     bspark = batch.sparkSession
@@ -424,18 +401,8 @@ def incremental_dedup_batch_body(
     # arrival half reads it AND it is what accumulates into the corpus
     # band table — before r12 the arrivals were minhashed twice per
     # micro-batch, once inside the pair probe and once for the bands
-    # write (VERDICT r11 "Next round #5"). Layout comes from the
-    # shared module constants so the persisted table can never desync
-    # from the probe's defaults (ADVICE r11 #3).
-    arr_bands = track(
-        _explode_bands(
-            arr.select(
-                "id", minhash_signature(F.col("ids"), MINHASH_K).alias("sig")
-            ),
-            N_BANDS,
-            BAND_ROWS,
-        )
-    )
+    # write (VERDICT r11 "Next round #5").
+    arr_bands = track(minhash_band_table(arr))
     # the corpus BAND table accumulates beside the ids index (r11:
     # same lever as the steady-state probes' persisted band table —
     # without it every micro-batch recomputes the k=16 minhashes over
@@ -465,16 +432,11 @@ def incremental_dedup_batch_body(
         # partition is missing is BACKFILLED here from its persisted
         # ids (deterministic band keys → replay/backfill idempotent;
         # one-time cost, after which the loop is covered forever).
-        idx_batches = _batch_partitions(index_dir, batch_id)
-        for b in sorted(idx_batches - _batch_partitions(bands_dir, batch_id)):
-            _explode_bands(
+        idx_batches = partition_ids(index_dir, "batch", below=batch_id)
+        have = partition_ids(bands_dir, "batch", below=batch_id)
+        for b in sorted(idx_batches - have):
+            minhash_band_table(
                 bspark.read.parquet(os.path.join(index_dir, f"batch={b}"))
-                .select(
-                    "id",
-                    minhash_signature(F.col("ids"), MINHASH_K).alias("sig"),
-                ),
-                N_BANDS,
-                BAND_ROWS,
             ).write.mode("overwrite").parquet(
                 os.path.join(bands_dir, f"batch={b}")
             )
@@ -593,7 +555,7 @@ def cluster_maintenance_batch_body(
     pairs = bspark.read.parquet(
         os.path.join(pairs_dir, f"batch={batch_id}")
     ).select("id_a", "id_b")
-    gen = latest_gen(asg_dir, below=batch_id)
+    gen = max(partition_ids(asg_dir, "gen", below=batch_id), default=None)
     if gen is not None:
         asg = bspark.read.parquet(os.path.join(asg_dir, f"gen={gen}"))
     else:  # first batch: no prior state

@@ -794,6 +794,7 @@ def test_containment_steady_cap_crossing_shifts_kc(spark):
     wrongly prune the one true pair — the assertion fails unless the
     crossing adjustment is exact."""
     from oamap_spark.operators.dedup import (
+        containment_corpus_tables,
         containment_pairs_incremental,
         containment_pairs_incremental_steady,
     )
@@ -819,20 +820,8 @@ def test_containment_steady_cap_crossing_shifts_kc(spark):
         ).collect()
     )
 
-    # steady form: corpus tables derived exactly as _steady_contain_tables
-    post = corpus.select("id", F.explode("ids").alias("sid"))
-    dfreq = post.groupBy("sid").agg(F.count(F.lit(1)).alias("df"))
-    over = dfreq.where(F.col("df") > cap).select("sid")
-    overcap = post.join(over, "sid").groupBy("id").agg(
-        F.count(F.lit(1)).alias("oc")
-    )
-    stats = (
-        corpus.select("id", F.size("ids").alias("sz"))
-        .join(overcap, "id", "left")
-        .select(
-            "id", "sz", (F.col("sz") - F.coalesce("oc", F.lit(0))).alias("kc_base")
-        )
-    )
+    # steady form: corpus tables from the builder the steady query stages
+    post, dfreq, stats = containment_corpus_tables(corpus, cap)
     steady = sorted(
         (r["id_a"], r["id_b"], r["containment"])
         for r in containment_pairs_incremental_steady(
@@ -1204,11 +1193,12 @@ def test_all_pairs_jaccard_threshold_domain(spark):
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
 
 
-def test_band_layout_constants_match_probe_defaults():
-    """ADVICE r11 #3: every persisted band table is built from the
-    shared module constants while the pair probes rely on keyword
-    defaults — if either drifts, persisted band tables silently desync
-    from the probe layout and pairs are missed. Pin the agreement."""
+def test_band_layout_constants_match_probe_defaults(spark):
+    """ADVICE r11 #3: every persisted band table is built by
+    minhash_band_table from the shared module constants while the pair
+    probes rely on keyword defaults — if either drifts, persisted band
+    tables silently desync from the probe layout and pairs are missed.
+    Pin the agreement."""
     import inspect
 
     from oamap_spark.operators import dedup as D
@@ -1218,6 +1208,10 @@ def test_band_layout_constants_match_probe_defaults():
         sig = inspect.signature(fn)
         assert sig.parameters["k"].default == D.MINHASH_K, fn.__name__
         assert sig.parameters["rows_per_band"].default == D.BAND_ROWS, fn.__name__
+    ids = spark.createDataFrame([(1, [11, 22, 33])], "id long, ids array<long>")
+    bands = D.minhash_band_table(ids).collect()
+    assert [r["band_idx"] for r in bands] == list(range(D.N_BANDS))
+    assert {len(r["band_key"].split("_")) for r in bands} == {D.BAND_ROWS}
 
 
 def test_incremental_dedup_batch_bands_accumulate_and_fallback(spark, tmp_path):

@@ -50,6 +50,7 @@ from oamap_spark import cache
 from oamap_spark.operators import clustering as C
 from oamap_spark.operators import dedup as D
 from oamap_spark.session import get_spark
+from oamap_spark.sources.staging import steady_split
 
 K, RPB, THR, N = 16, 2, 0.9, 3  # the dedup_clusters_* family's params
 
@@ -90,9 +91,8 @@ def main() -> None:
     spark = get_spark()
     for sf in sfs:
         docs = spark.read.parquet(f"/root/testdata/{sf}/documents.parquet")
-        src_no = F.substring("source", 4, 10).cast("int")
-        corpus = docs.where(src_no < 18)
-        arrivals = docs.where(src_no >= 18).select("doc_id", "text")
+        corpus, arrivals = steady_split(docs)
+        arrivals = arrivals.select("doc_id", "text")
         tmp = tempfile.mkdtemp(prefix="oamap_clu_curve_")
         if amplify > 1:
             corpus_path = os.path.join(tmp, "corpus_amp")
