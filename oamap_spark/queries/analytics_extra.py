@@ -69,7 +69,9 @@ def date_spine_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar days with zero orders appear with n=0 (the OLAP
     time-series densification idiom). The spine is generated (one row,
     sequence, explode — no table scan) and the daily aggregate joins
-    onto it; the spine side is tiny and broadcast."""
+    onto it. The spine is the preserved side of the left outer join,
+    so it can never be the build side; the daily aggregate (at most 90
+    rows, one per day) is broadcast instead."""
     orders = load_table(spark, sf_dir, "orders")
     spine = spark.range(1).select(
         F.explode(
@@ -90,7 +92,7 @@ def date_spine_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("total"),
         )
     )
-    return F.broadcast(spine).join(daily, "day", "left").select(
+    return spine.join(F.broadcast(daily), "day", "left").select(
         "day",
         F.coalesce("n", F.lit(0)).alias("n"),
         F.coalesce("total", F.lit(0.0)).alias("total"),

@@ -100,6 +100,7 @@ SMOKE_NODEIDS = frozenset(
         "test_npy.py::test_from_numpy_columns_and_nested",
         "test_staging.py::test_staging_paths_unique_and_tracked",
         "test_driver_contract.py::test_smoke_tier_nodeids_exist",
+        "test_bench.py::test_measure_times_best_of_n_excluding_prepare_then_cleans_up",
         "test_driver_contract.py::test_queries_follow_registration_order",
         "test_metrics.py::test_observed_metrics_ride_the_query",
         "test_curation.py::test_chunks_cover_document_exactly",

@@ -132,10 +132,18 @@ def test_chunking_is_narrow_no_exchange(spark, queries):
 
 
 def test_date_spine_broadcasts_spine(spark, queries):
-    """The generated calendar spine is tiny and must broadcast — the
-    orders aggregate must not shuffle against it."""
+    """The spine/daily join must broadcast — the orders aggregate must
+    not shuffle against the spine. The spine is the preserved side of
+    the left outer join and can never be built, so the hint sits on the
+    daily aggregate: a hint on the spine is dropped by Spark (it logs
+    `build left for left outer join`) and the join plans unhinted."""
     df = queries["date_spine_gap_fill"](spark, SF_SMOKE)
     assert audit.broadcast_join_count(df) >= 1
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    join = [ln for ln in plan.splitlines() if "Join LeftOuter" in ln]
+    assert len(join) == 1, plan
+    assert "rightHint=(strategy=broadcast)" in join[0], join[0]
+    assert "leftHint" not in join[0], join[0]
 
 
 def test_contamination_broadcasts_bench_side(spark, queries):

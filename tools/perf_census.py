@@ -32,9 +32,9 @@ errors = []
 for name, spec in specs.items():
     twin = "sf_bounded_oracle_twin" in (spec.tags or ())
     try:
-        t0 = time.time()
+        t0 = time.perf_counter()
         n = spec.fn(spark, SF_DIR).count()
-        dt = time.time() - t0
+        dt = time.perf_counter() - t0
         rows.append((dt, name, n, twin))
         flag = " [twin]" if twin else ""
         print(f"{dt:8.2f}s {name} ({n} rows){flag}", flush=True)
