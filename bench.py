@@ -242,7 +242,7 @@ def microbenches(spark, sf_dir: str) -> tuple[list[Micro], dict[str, dict]]:
         contain_degen.select(
             F.col("doc_id"), token_id_array("text").alias("tids")
         )
-        .select("doc_id", F.explode(combine_shingle_ids(F.col("tids"), 3)).alias("sid"))
+        .select("doc_id", F.explode(combine_shingle_ids("tids", 3)).alias("sid"))
         .groupBy("sid")
         .agg(F.count(F.lit(1)).alias("df"))
     )

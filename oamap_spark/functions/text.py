@@ -102,37 +102,49 @@ SQL_IDS_OF = (
 )
 
 
-def token_id_array(text_col: Column | str) -> Column:
-    """Positional (non-distinct) modular token ids — the md5 pass runs
-    once per token; downstream shingle ids are pure arithmetic."""
-    return F.transform(tokens(text_col), token_id_mod_p)
+def _ident(name: str) -> str:
+    """A column name as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def combine_shingle_ids(tids: Column, n: int = 3) -> Column:
-    """Distinct n-gram shingle ids from a *materialized* token-id
-    array: id = ((t₁·31 + t₂) mod P · 31 + t₃) mod P — no hashing per
-    shingle, just modular arithmetic (products stay < 2⁶² for int64).
-    Documents shorter than n tokens fall back to one id: the
-    polynomial fold of the whole stream.
+def _spark_window_id(tids: str, n: int) -> str:
+    """Spark SQL of the n-gram id at lambda position ``i`` of the
+    token-id array ``tids``: ((t_i·31 + t_{i+1}) mod P · 31 + …) mod P."""
+    expr = f"element_at({tids}, i)"
+    for j in range(1, n):
+        expr = f"({expr} * 31 + element_at({tids}, i + {j})) % {HASH_P}"
+    return expr
 
-    `tids` MUST be a projected column, not an inline expression: each
+
+def token_id_array(text_col: str) -> Column:
+    """Positional (non-distinct) modular token ids of the column named
+    ``text_col`` — the md5 pass runs once per token; downstream shingle
+    ids are pure arithmetic. One parsed expression."""
+    return F.expr(
+        f"transform(split({_ident(text_col)}, ' '), "
+        f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) % {HASH_P})"
+    )
+
+
+def combine_shingle_ids(tids: str, n: int = 3) -> Column:
+    """Distinct n-gram shingle ids from the *materialized* token-id
+    array column named ``tids``: id = ((t₁·31 + t₂) mod P · 31 + t₃)
+    mod P — no hashing per shingle, just modular arithmetic (products
+    stay < 2⁶² for int64). Documents shorter than n tokens fall back to
+    one id: the polynomial fold of the whole stream. One parsed
+    expression.
+
+    `tids` MUST name a projected column, not an inline expression: each
     element_at in the lambda re-evaluates its argument subtree, so an
     inline md5-transform would run 3·|shingles| times per row
     (measured 12× slower at sf0.1)."""
-    idx = F.sequence(F.lit(1), F.size(tids) - (n - 1))
-
-    def comb(i: Column) -> Column:
-        out = F.element_at(tids, i)
-        for j in range(1, n):
-            out = (out * 31 + F.element_at(tids, i + j)) % HASH_P
-        return out
-
-    gram = F.transform(idx, comb)
-    whole = F.aggregate(
-        tids, F.lit(0).cast("long"), lambda acc, x: (acc * 31 + x) % HASH_P
-    )
-    return F.array_distinct(
-        F.when(F.size(tids) >= n, gram).otherwise(F.array(whole))
+    t = _ident(tids)
+    return F.expr(
+        f"array_distinct(CASE WHEN size({t}) >= {n} "
+        f"THEN transform(sequence(1, size({t}) - {n - 1}), "
+        f"i -> {_spark_window_id(t, n)}) "
+        f"ELSE array(aggregate({t}, CAST(0 AS BIGINT), "
+        f"(acc, x) -> (acc * 31 + x) % {HASH_P})) END)"
     )
 
 
@@ -160,27 +172,21 @@ def sql_combine_shingle_ids(tids_sql: str, n: int = 3) -> str:
 SQL_COMBINE_SHINGLE_IDS = sql_combine_shingle_ids("{tids}", 3)
 
 
-def positional_window_ids(tids: Column, n: int = 8) -> Column:
-    """POSITIONAL n-gram window ids — array<struct<pos,wid>> with pos
-    the 1-based token offset of each window. Same modular polynomial
-    as :func:`combine_shingle_ids` but NOT distinct and with no
-    short-doc fallback: a document shorter than n tokens has no
-    n-token window, hence no duplicated span to cut. Positions are
-    what span surgery (duplicated-span removal) needs; the distinct
-    variant serves set-similarity."""
-    idx = F.sequence(F.lit(1), F.size(tids) - (n - 1))
-
-    def comb(i: Column) -> Column:
-        out = F.element_at(tids, i)
-        for j in range(1, n):
-            out = (out * 31 + F.element_at(tids, i + j)) % HASH_P
-        return out
-
-    gram = F.transform(
-        idx, lambda i: F.struct(i.alias("pos"), comb(i).alias("wid"))
-    )
-    return F.when(F.size(tids) >= n, gram).otherwise(
-        F.array().cast("array<struct<pos:int,wid:long>>")
+def positional_window_ids(tids: str, n: int = 8) -> Column:
+    """POSITIONAL n-gram window ids of the token-id array column named
+    ``tids`` — array<struct<pos,wid>> with pos the 1-based token offset
+    of each window. Same modular polynomial as
+    :func:`combine_shingle_ids` but NOT distinct and with no short-doc
+    fallback: a document shorter than n tokens has no n-token window,
+    hence no duplicated span to cut. Positions are what span surgery
+    (duplicated-span removal) needs; the distinct variant serves
+    set-similarity. One parsed expression."""
+    t = _ident(tids)
+    return F.expr(
+        f"CASE WHEN size({t}) >= {n} "
+        f"THEN transform(sequence(1, size({t}) - {n - 1}), "
+        f"i -> named_struct('pos', i, 'wid', {_spark_window_id(t, n)})) "
+        f"ELSE CAST(array() AS ARRAY<STRUCT<pos: INT, wid: BIGINT>>) END"
     )
 
 
@@ -245,19 +251,16 @@ def fingerprint_native(text_col: Column | str) -> Column:
     return F.xxhash64(F.concat_ws("", enc))
 
 
-def minhash_signature(ids_col: Column, k: int) -> Column:
-    """k-element MinHash signature over an array of modular token ids:
-    sig_j = min_x (a_j*x + b_j) % P. Array of longs.
-
-    NB: closures are built via a factory, never `lambda x, a=a`: extra
-    default args change the lambda's arity, which PySpark reads as
-    requesting the HOF's (element, index) form."""
-
-    def mk(a: int, b: int):
-        return lambda x: (x * a + b) % HASH_P
-
-    sigs = [F.array_min(F.transform(ids_col, mk(a, b))) for a, b in hash_coeffs(k)]
-    return F.array(*sigs)
+def minhash_signature(ids: str, k: int) -> Column:
+    """k-element MinHash signature over the modular token-id array
+    column named ``ids``: sig_j = min_x (a_j*x + b_j) % P. Array of
+    longs. One parsed expression."""
+    t = _ident(ids)
+    parts = [
+        f"array_min(transform({t}, x -> (x * {a} + {b}) % {HASH_P}))"
+        for a, b in hash_coeffs(k)
+    ]
+    return F.expr("array(" + ", ".join(parts) + ")")
 
 
 def sql_minhash_signature(ids_sql: str, k: int) -> str:

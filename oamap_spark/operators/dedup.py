@@ -204,7 +204,7 @@ def shingle_ids_table(
 
     return track(
         df.select(F.col(id_col).alias("id"), token_id_array(text_col).alias("tids"))
-        .select("id", combine_shingle_ids(F.col("tids"), n).alias("ids"))
+        .select("id", combine_shingle_ids("tids", n).alias("ids"))
     )
 
 
@@ -236,7 +236,7 @@ def flagged_shingle_ids_table(
             F.col(id_col).alias("id"),
             is_new.alias("is_new"),
             token_id_array(text_col).alias("tids"),
-        ).select("id", "is_new", combine_shingle_ids(F.col("tids"), n).alias("ids"))
+        ).select("id", "is_new", combine_shingle_ids("tids", n).alias("ids"))
     )
 
 
@@ -316,28 +316,17 @@ def _explode_bands(sig_df: DataFrame, n_bands: int, rows_per_band: int) -> DataF
     concatenations (no modular-combine overflow, portable to SQL) —
     the single source of the band layout shared by the batch and
     incremental pair builders, so the oracle replay stays in lockstep
-    with both."""
+    with both. The bands are one parsed expression."""
     keep = [c for c in sig_df.columns if c != "sig"]
-    return sig_df.select(
-        *keep,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.concat_ws(
-                            "_",
-                            *[
-                                F.col("sig").getItem(i * rows_per_band + r)
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(*keep, "band.band_idx", "band.band_key")
+    bands = ", ".join(
+        f"named_struct('band_idx', {i}, 'band_key', concat_ws('_', "
+        + ", ".join(f"sig[{i * rows_per_band + r}]" for r in range(rows_per_band))
+        + "))"
+        for i in range(n_bands)
+    )
+    return sig_df.select(*keep, F.expr(f"explode(array({bands})) AS band")).select(
+        *keep, "band.band_idx", "band.band_key"
+    )
 
 
 def minhash_band_table(ids_df: DataFrame) -> DataFrame:
@@ -346,7 +335,7 @@ def minhash_band_table(ids_df: DataFrame) -> DataFrame:
     document exploded into ``N_BANDS`` bands of ``BAND_ROWS``, what the
     pair probes read as ``corpus_bands_df`` / ``arrival_bands_df``."""
     sig = ids_df.select(
-        "id", minhash_signature(F.col("ids"), MINHASH_K).alias("sig")
+        "id", minhash_signature("ids", MINHASH_K).alias("sig")
     )
     return _explode_bands(sig, N_BANDS, BAND_ROWS)
 
@@ -406,7 +395,7 @@ def minhash_lsh_pairs(
     # reference (measured 12–14× slower).
     if ids_df is None:
         ids_df = shingle_ids_table(df, id_col, text_col, n)
-    sig_df = ids_df.select("id", minhash_signature(F.col("ids"), k).alias("sig"))
+    sig_df = ids_df.select("id", minhash_signature("ids", k).alias("sig"))
 
     bands = _explode_bands(sig_df, n_bands, rows_per_band)
 
@@ -528,7 +517,7 @@ def minhash_lsh_pairs_incremental(
             )
         else:
             arr_sig = ids_df.where(F.col("is_new")).select(
-                "id", "is_new", minhash_signature(F.col("ids"), k).alias("sig")
+                "id", "is_new", minhash_signature("ids", k).alias("sig")
             )
             arr_bands = _explode_bands(arr_sig, n_bands, rows_per_band)
         if corpus_bands_df is not None:
@@ -537,13 +526,13 @@ def minhash_lsh_pairs_incremental(
             )
         else:
             cor_sig = ids_df.where(~F.col("is_new")).select(
-                "id", "is_new", minhash_signature(F.col("ids"), k).alias("sig")
+                "id", "is_new", minhash_signature("ids", k).alias("sig")
             )
             cor_bands = _explode_bands(cor_sig, n_bands, rows_per_band)
         bands = cor_bands.unionByName(arr_bands)
     else:
         sig_df = ids_df.select(
-            "id", "is_new", minhash_signature(F.col("ids"), k).alias("sig")
+            "id", "is_new", minhash_signature("ids", k).alias("sig")
         )
         bands = _explode_bands(sig_df, n_bands, rows_per_band)
     cand = (
@@ -593,7 +582,7 @@ def ngram_window_overlap(
     ids = track(
         df.select(
             F.col(id_col).alias("id"), token_id_array(text_col).alias("tids")
-        ).select("id", combine_shingle_ids(F.col("tids"), n).alias("wids"))
+        ).select("id", combine_shingle_ids("tids", n).alias("wids"))
     )
     # explode_outer + null filter, NOT plain explode: a plain explode
     # triggers InferFiltersFromGenerate — Catalyst infers
@@ -659,7 +648,7 @@ def positional_window_table(
 
     return (
         df.select(F.col(id_col).alias("id"), token_id_array(text_col).alias("tids"))
-        .select("id", positional_window_ids(F.col("tids"), n).alias("pw"))
+        .select("id", positional_window_ids("tids", n).alias("pw"))
         .select("id", F.explode_outer("pw").alias("w"))
         .where(F.col("w").isNotNull())
         .select("id", F.col("w.pos").alias("pos"), F.col("w.wid").alias("wid"))

@@ -244,7 +244,7 @@ def train_benchmark_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = tid.select(
         "doc_id",
         "is_bench",
-        F.explode(X.combine_shingle_ids(F.col("tids"), OVERLAP_N)).alias("gid"),
+        F.explode(X.combine_shingle_ids("tids", OVERLAP_N)).alias("gid"),
     )
     bench = grams.where("is_bench").select(
         F.col("doc_id").alias("bench_doc"), "gid"
@@ -329,7 +329,7 @@ def train_decontaminated_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = tid.select(
         "doc_id",
         "is_bench",
-        F.explode(X.combine_shingle_ids(F.col("tids"), OVERLAP_N)).alias("gid"),
+        F.explode(X.combine_shingle_ids("tids", OVERLAP_N)).alias("gid"),
     )
     bench_gids = grams.where("is_bench").select("gid").distinct()
     dropped = (

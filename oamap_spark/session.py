@@ -82,5 +82,8 @@ def get_spark(app_name: str = "oamap-spark", cpus: int | None = None) -> SparkSe
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # The carriage-return-redrawn stage bars share stderr with the
+        # harnesses' `# label: ...` lines and glue onto them.
+        .config("spark.ui.showConsoleProgress", "false")
     )
     return configure_session(builder.getOrCreate())

@@ -271,7 +271,6 @@ def foreach_batch_upsert_latest(
     comparison, so the final state is independent of micro-batch
     arrival order and replays idempotently."""
     from pyspark.sql import Window
-    from pyspark.sql.utils import AnalysisException
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         updates = batch.select(
@@ -280,18 +279,13 @@ def foreach_batch_upsert_latest(
             "event_type",
             F.expr("ts_ns div 1000").alias("ts_us"),
         )
-        bspark = batch.sparkSession
-        try:
-            current = bspark.read.parquet(target_dir)
-            merged = current.unionByName(updates)
-        except AnalysisException as exc:
-            # ONLY the first-batch missing-target case may fall through
-            # to "start fresh"; any other failure (corrupt target,
-            # schema drift, transient IO) must raise — silently
-            # replacing accumulated state with one batch would emit
-            # wrong results, not an error.
-            if "PATH_NOT_FOUND" not in str(exc) and "does not exist" not in str(exc):
-                raise
+        # ONLY a target that was never written starts fresh; reading
+        # an existing one raises on any failure (corrupt target,
+        # schema drift, transient IO) — silently replacing accumulated
+        # state with one batch would emit wrong results, not an error.
+        if os.path.isdir(target_dir):
+            merged = batch.sparkSession.read.parquet(target_dir).unionByName(updates)
+        else:
             merged = updates
         w = Window.partitionBy("user_id").orderBy(
             F.desc("ts_us"), F.desc("event_id")
@@ -384,8 +378,6 @@ def incremental_dedup_batch_body(
     testable (call it twice with the same batch_id: the second run
     must leave both partitions byte-identical in content). See
     :func:`foreach_batch_incremental_minhash` for the invariants."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
     from oamap_spark.cache import track
     from oamap_spark.operators.dedup import (
         flagged_shingle_ids_table,
@@ -411,12 +403,16 @@ def incremental_dedup_batch_body(
     # columnar scan and only arrivals are hashed). Derived path, not a
     # new parameter, so replay-idempotency callers are unchanged.
     bands_dir = index_dir.rstrip("/") + "_bands"
-    corpus_bands = None
-    try:
-        # batch < batch_id: a REPLAYED micro-batch (at-least-once
-        # foreachBatch) must not read its own first attempt's
-        # signatures back as corpus — duplicate ids would fan every
-        # verify-join pair out 2-4x in the rewritten partition
+    # batch < batch_id: a REPLAYED micro-batch (at-least-once
+    # foreachBatch) must not read its own first attempt's signatures
+    # back as corpus — duplicate ids would fan every verify-join pair
+    # out 2-4x in the rewritten partition. Only an index with no such
+    # batch starts empty (a listing, no read); reading an existing one
+    # raises on any failure — a silently-dropped index would re-emit
+    # nothing for true cross-batch dups.
+    idx_batches = partition_ids(index_dir, "batch", below=batch_id)
+    ids_df, corpus_bands = arr, None
+    if idx_batches:
         corpus = (
             bspark.read.parquet(index_dir)
             .where(F.col("batch") < batch_id)
@@ -432,7 +428,6 @@ def incremental_dedup_batch_body(
         # partition is missing is BACKFILLED here from its persisted
         # ids (deterministic band keys → replay/backfill idempotent;
         # one-time cost, after which the loop is covered forever).
-        idx_batches = partition_ids(index_dir, "batch", below=batch_id)
         have = partition_ids(bands_dir, "batch", below=batch_id)
         for b in sorted(idx_batches - have):
             minhash_band_table(
@@ -440,20 +435,11 @@ def incremental_dedup_batch_body(
             ).write.mode("overwrite").parquet(
                 os.path.join(bands_dir, f"batch={b}")
             )
-        if idx_batches:
-            corpus_bands = (
-                bspark.read.parquet(bands_dir)
-                .where(F.col("batch") < batch_id)
-                .select("id", "band_idx", "band_key")
-            )
-    except AnalysisException as exc:
-        # ONLY the first-batch missing-index case may start empty;
-        # any other failure must raise — a silently-dropped index
-        # would re-emit nothing for true cross-batch dups.
-        if "PATH_NOT_FOUND" not in str(exc) and "does not exist" not in str(exc):
-            raise
-        ids_df = arr
-        corpus_bands = None
+        corpus_bands = (
+            bspark.read.parquet(bands_dir)
+            .where(F.col("batch") < batch_id)
+            .select("id", "band_idx", "band_key")
+        )
     pairs = minhash_lsh_pairs_incremental(
         None, "doc_id", "text", "__nw", ids_df=ids_df,
         corpus_bands_df=corpus_bands, arrival_bands_df=arr_bands,

@@ -713,26 +713,33 @@ def test_embedding_incremental_equals_filtered_batch(spark, queries):
 
 
 def test_embedding_incremental_body_never_grams_corpus_only():
-    """The rectangular-gram bucket body: a bucket of identical
-    corpus-only vectors emits NOTHING (the batch body would emit the
-    pair) — old×old work is skipped inside the worker, not filtered
-    downstream — while a new member pairs against every old one."""
-    import numpy as np
+    """The incremental body: a bucket of identical corpus-only vectors
+    emits NOTHING (the batch body emits the pair) — old×old work is
+    skipped inside the worker, not filtered downstream — while a new
+    member pairs against every old one."""
     import pandas as pd
 
-    from oamap_spark.queries.llm_similarity import _bucket_neardup_pairs_vs_new
+    from oamap_spark.queries.llm_similarity import (
+        _partition_neardup_pairs,
+        _partition_neardup_pairs_incremental,
+    )
+
+    def pairs(body, pdf):
+        out = pd.concat(list(body(iter([pdf]))), ignore_index=True)
+        return set(zip(out["id_a"], out["id_b"]))
 
     vec = [1.0, 2.0, 3.0, 4.0]
     old_only = pd.DataFrame(
-        {"vec_id": [1, 2], "embedding": [vec, vec], "is_new": [False, False]}
+        {"bk": [1, 1], "vec_id": [1, 2], "embedding": [vec, vec],
+         "is_new": [False, False]}
     )
-    assert _bucket_neardup_pairs_vs_new(old_only).empty
+    assert pairs(_partition_neardup_pairs_incremental(), old_only) == set()
+    assert pairs(_partition_neardup_pairs(), old_only) == {(1, 2)}
     with_new = pd.DataFrame(
-        {"vec_id": [1, 2, 3], "embedding": [vec, vec, vec],
-         "is_new": [False, False, True]}
+        {"bk": [1, 1, 1], "vec_id": [3, 1, 2], "embedding": [vec, vec, vec],
+         "is_new": [True, False, False]}  # arrivals sorted first
     )
-    out = _bucket_neardup_pairs_vs_new(with_new)
-    assert set(zip(out["id_a"], out["id_b"])) == {(1, 3), (2, 3)}
+    assert pairs(_partition_neardup_pairs_incremental(), with_new) == {(1, 3), (2, 3)}
 
 
 def test_containment_incremental_equals_filtered_batch(spark, queries):
@@ -903,20 +910,114 @@ def test_embedding_incremental_capped_equals_filtered_capped_batch(spark, querie
 
 
 def test_star_pairs_vs_new_is_filtered_batch_star():
-    """_star_pairs_vs_new == _star_pairs filtered to arrival-touching
-    edges, in both bmin-old and bmin-new orientations."""
+    """An over-cap bucket's incremental star == the batch star filtered
+    to arrival-touching edges, in both bmin-old and bmin-new
+    orientations."""
+    import numpy as np
+    import pandas as pd
+
+    from oamap_spark.queries.llm_similarity import (
+        _partition_neardup_pairs,
+        _partition_neardup_pairs_incremental,
+    )
+
+    def star(body, ids, nw):
+        order = np.argsort(~np.array(nw), kind="stable")  # arrivals first
+        pdf = pd.DataFrame(
+            {"bk": 0, "vec_id": np.array(ids)[order],
+             "embedding": [None] * len(ids), "is_new": np.array(nw)[order]}
+        )
+        out = pd.concat(list(body(iter([pdf]))), ignore_index=True)
+        return set(zip(out["id_a"], out["id_b"]))
+
+    ids = [7, 3, 9, 5]
+    full = star(_partition_neardup_pairs(1), ids, [True] * 4)
+    assert full == {(3, 5), (3, 7), (3, 9)}
+    nw_old_min = [True, False, False, True]  # bmin=3 is old
+    got = star(_partition_neardup_pairs_incremental(1), ids, nw_old_min)
+    assert got == {p for p in full if nw_old_min[ids.index(p[1])]}
+    nw_new_min = [False, True, False, False]  # bmin=3 is new
+    assert star(_partition_neardup_pairs_incremental(1), ids, nw_new_min) == full
+
+
+def _brute_force_bucket_pairs(ids, nw, emb, bucket_cap, incremental):
+    """Reference for the vectorized body: one bucket at a time, every
+    pair's cosine on its own, the star for an over-cap bucket."""
     import numpy as np
 
-    from oamap_spark.queries.llm_similarity import _star_pairs, _star_pairs_vs_new
+    s = len(ids)
+    if bucket_cap is not None and s > bucket_cap:
+        m = min(ids)
+        edges = {(m, x) for x in ids if x != m}
+        if incremental:
+            new = {x for x, f in zip(ids, nw) if f}
+            edges = {e for e in edges if m in new or e[1] in new}
+        return edges
+    out = set()
+    for i in range(s):
+        for j in range(i + 1, s):
+            if incremental and not (nw[i] or nw[j]):
+                continue
+            cos = np.dot(emb[i], emb[j]) / (
+                np.linalg.norm(emb[i]) * np.linalg.norm(emb[j])
+            )
+            if cos >= 0.99 - 1e-9:
+                out.add((min(ids[i], ids[j]), max(ids[i], ids[j])))
+    return out
 
-    ids = np.array([7, 3, 9, 5], dtype=np.int64)
-    full = {(r.id_a, r.id_b) for r in _star_pairs(ids).itertuples()}
-    nw_old_min = np.array([True, False, False, True])  # bmin=3 is old
-    got = {(r.id_a, r.id_b) for r in _star_pairs_vs_new(ids, nw_old_min).itertuples()}
-    assert got == {p for p in full if nw_old_min[list(ids).index(p[1])]}
-    nw_new_min = np.array([False, True, False, False])  # bmin=3 is new
-    got2 = {(r.id_a, r.id_b) for r in _star_pairs_vs_new(ids, nw_new_min).itertuples()}
-    assert got2 == full
+
+@pytest.mark.parametrize("seed", range(6))
+@pytest.mark.parametrize(
+    "bucket_cap,incremental",
+    [(None, False), (4, False), (None, True), (4, True)],
+    ids=["uncapped", "capped_star", "incremental", "capped_incremental"],
+)
+def test_neardup_body_matches_per_bucket_brute_force(seed, bucket_cap, incremental):
+    """The vectorized mapInPandas body == a per-bucket brute-force
+    gram on random buckets (sizes 1-9, near-duplicate clusters beside
+    unrelated vectors, random arrival flags) split into Arrow batches
+    at arbitrary rows, so buckets straddle one or several batches,
+    under all four modes. Cosines sit far from the threshold (≥ 0.9999
+    or ≈ 0), so float order cannot flip a pair."""
+    import numpy as np
+    import pandas as pd
+
+    from oamap_spark.queries.llm_similarity import (
+        _partition_neardup_pairs,
+        _partition_neardup_pairs_incremental,
+    )
+
+    rng = np.random.default_rng(seed)
+    rows, expected, next_id = [], set(), 0
+    for bk in range(40):
+        s = int(rng.integers(1, 10))
+        ids = list(range(next_id, next_id + s))
+        next_id += s
+        rng.shuffle(ids)
+        base = rng.normal(size=8)
+        emb = [
+            base + rng.normal(scale=1e-3, size=8) if rng.random() < 0.6
+            else rng.normal(size=8)
+            for _ in ids
+        ]
+        nw = list(rng.random(s) < 0.3) if incremental else [True] * s
+        order = sorted(range(s), key=lambda i: not nw[i])  # arrivals first
+        ids, nw, emb = [ids[i] for i in order], [nw[i] for i in order], [emb[i] for i in order]
+        expected |= _brute_force_bucket_pairs(ids, nw, emb, bucket_cap, incremental)
+        rows += [(bk, i, e, f) for i, e, f in zip(ids, emb, nw)]
+    pdf = pd.DataFrame(rows, columns=["bk", "vec_id", "embedding", "is_new"])
+    cuts = np.sort(rng.choice(np.arange(1, len(pdf)), size=12, replace=False))
+    batches = [pdf.iloc[a:b].reset_index(drop=True)
+               for a, b in zip(np.r_[0, cuts], np.r_[cuts, len(pdf)])]
+    if not incremental:
+        batches = [b.drop(columns="is_new") for b in batches]
+    factory = (_partition_neardup_pairs_incremental if incremental
+               else _partition_neardup_pairs)
+    out = pd.concat(list(factory(bucket_cap)(iter(batches))), ignore_index=True)
+    got = list(zip(out["id_a"], out["id_b"]))
+    assert len(got) == len(set(got)), "a pair surfaced twice within its bucket"
+    assert set(got) == expected
+    assert expected, "no candidate pairs — vacuous comparison"
 
 
 def test_minhash_incremental_from_persisted_corpus_index(spark, tmp_path):
@@ -1212,6 +1313,39 @@ def test_band_layout_constants_match_probe_defaults(spark):
     bands = D.minhash_band_table(ids).collect()
     assert [r["band_idx"] for r in bands] == list(range(D.N_BANDS))
     assert {len(r["band_key"].split("_")) for r in bands} == {D.BAND_ROWS}
+
+
+@pytest.mark.parametrize("builder,ceiling", [("bands", 150), ("flagged_ids", 350)])
+def test_minhash_builders_build_in_few_py4j_calls(spark, monkeypatch, builder, ceiling):
+    """Plan building is driver time on every steady-state probe and
+    stream micro-batch: the MinHash signature, the band explode and the
+    shingle-id builders are each ONE parsed SQL expression, not a
+    Column tree assembled one py4j round trip per node (the tree form
+    took ~1,900 calls for the band table and ~700 for the flagged
+    shingle-id table). The count of py4j commands does not depend on
+    host load, so the ceiling is a stable pin."""
+    from oamap_spark import cache
+    from oamap_spark.operators import dedup as D
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    ids = spark.createDataFrame([(1, [11, 22, 33])], "id long, ids array<long>")
+    build = {
+        "bands": lambda: D.minhash_band_table(ids),
+        "flagged_ids": lambda: D.flagged_shingle_ids_table(
+            docs.withColumn("__nw", F.lit(True)), "doc_id", "text", "__nw", 3
+        ),
+    }[builder]
+    build()  # first build loads the JVM-side classes
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+    monkeypatch.setattr(
+        client, "send_command", lambda *a, **k: calls.append(1) or send(*a, **k)
+    )
+    build()
+    monkeypatch.undo()
+    cache.sweep()
+    assert 0 < len(calls) <= ceiling, f"{builder}: {len(calls)} py4j calls"
 
 
 def test_incremental_dedup_batch_bands_accumulate_and_fallback(spark, tmp_path):

@@ -385,3 +385,26 @@ def test_stream_cluster_maintenance_without_generation_raises(
     q = entrymod.queries()["stream_cluster_maintenance"]
     with pytest.raises(RuntimeError, match="wrote no assignment generation"):
         q(spark, SF_SMOKE)
+
+
+def test_session_turns_console_progress_bars_off(spark):
+    """The stage progress bars redraw over stderr with carriage returns
+    and would glue onto the harnesses' `# label: ...` lines."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.ui.showConsoleProgress") == "false"
+
+
+def test_incremental_dedup_batch_unreadable_index_raises(spark, tmp_path):
+    """Only an index with no earlier batch starts empty: an existing
+    but unreadable one (a non-parquet file in batch=0) raises instead
+    of silently probing the arrivals against an empty corpus."""
+    index_dir = tmp_path / "index"
+    (index_dir / "batch=0").mkdir(parents=True)
+    (index_dir / "batch=0" / "part-00000.parquet").write_bytes(b"not parquet")
+    arrivals = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    with pytest.raises(Exception, match="not a Parquet file"):
+        P.incremental_dedup_batch_body(
+            arrivals, 1, str(index_dir), str(tmp_path / "pairs")
+        )
