@@ -248,17 +248,19 @@ def steady_ids_with_arrivals(
     n: int = 3,
 ) -> DataFrame:
     """The ``ids_df`` of a steady-state probe: the arrival batch's
-    flagged shingle table (tokenizes ONLY the arrivals) unioned under
-    the persisted corpus index reader (``index_df``: an (id, ids)
-    parquet scan, flagged ``is_new=False`` here). The is_new flags are
-    literals, which the probes' filters fold, so each half of the
-    union prunes away wherever only one side is consumed."""
+    flagged shingle table (tokenizes ONLY the arrivals) plus its
+    :func:`signature_table` ``sig``, unioned under the persisted corpus
+    index reader (``index_df``: an (id, ids, sig) parquet scan, flagged
+    ``is_new=False`` here). The is_new flags are literals, which the
+    probes' filters fold, so each half of the union prunes away
+    wherever only one side is consumed; a consumer that reads no
+    ``sig`` prunes the arrivals' minhashes away too."""
     arr_ids = flagged_shingle_ids_table(
         arrivals.withColumn("__nw", F.lit(True)), id_col, text_col, "__nw", n
     )
     return index_df.select(
-        "id", F.lit(False).alias("is_new"), "ids"
-    ).unionByName(arr_ids)
+        "id", F.lit(False).alias("is_new"), "ids", "sig"
+    ).unionByName(signature_table(arr_ids))
 
 
 def pair_once_from_probe() -> Column:
@@ -296,14 +298,14 @@ def _jaccard_verify(cand: DataFrame, ids_df: DataFrame, threshold: float) -> Dat
     )
 
 
-# The ONE MinHash/LSH band layout every persisted band table and every
-# probe must share (ADVICE r11 #3: the layout was hard-coded at each
-# persisted-bands call site while the probes relied on the function
-# defaults — a default change would silently desync persisted band
-# tables from the probe and drop pairs). Builders of persisted band
-# tables (the streaming batch body, the steady-state staging) build
-# them with minhash_band_table; the pair functions' keyword defaults
-# stay literal (16/2) and tests pin that they agree.
+# The ONE MinHash signature length every persisted signature index
+# and every probe must share (ADVICE r11 #3: a layout hard-coded at
+# each persisting call site while the probes relied on the function
+# defaults would silently desync the persisted index from the probe
+# and drop pairs). The index persists ``sig`` (signature_table) and
+# every probe bands it at probe time, so only k is persisted; the
+# pair functions' keyword defaults stay literal (16/2) and tests pin
+# that they agree.
 MINHASH_K = 16
 BAND_ROWS = 2
 N_BANDS = MINHASH_K // BAND_ROWS
@@ -329,15 +331,11 @@ def _explode_bands(sig_df: DataFrame, n_bands: int, rows_per_band: int) -> DataF
     )
 
 
-def minhash_band_table(ids_df: DataFrame) -> DataFrame:
-    """The persisted (id, band_idx, band_key) band table of a shingle-id
-    table (id, ids) in the shared layout: ``MINHASH_K`` minhashes per
-    document exploded into ``N_BANDS`` bands of ``BAND_ROWS``, what the
-    pair probes read as ``corpus_bands_df`` / ``arrival_bands_df``."""
-    sig = ids_df.select(
-        "id", minhash_signature("ids", MINHASH_K).alias("sig")
-    )
-    return _explode_bands(sig, N_BANDS, BAND_ROWS)
+def signature_table(ids_df: DataFrame) -> DataFrame:
+    """A shingle-id table (id, ..., ids) plus its ``MINHASH_K``-long
+    MinHash signature ``sig``: the persisted signature index layout,
+    whose bands every MinHash probe explodes at probe time."""
+    return ids_df.select("*", minhash_signature("ids", MINHASH_K).alias("sig"))
 
 
 def minhash_lsh_pairs(
@@ -439,8 +437,6 @@ def minhash_lsh_pairs_incremental(
     threshold: float = 0.9,
     n: int = 3,
     ids_df: DataFrame | None = None,
-    corpus_bands_df: DataFrame | None = None,
-    arrival_bands_df: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental MinHash+LSH: near-dup pairs that involve AT LEAST
     ONE new document — the continuous-ingestion shape, where an
@@ -478,24 +474,16 @@ def minhash_lsh_pairs_incremental(
     feed the persisted corpus index unioned with fresh arrival rows
     instead of re-deriving everything from text.
 
-    ``corpus_bands_df``: optionally pass the corpus's PRE-EXPLODED
-    band table (id, band_idx, band_key — MUST come from the same
-    ``k``/``rows_per_band`` layout over the same shingle ids, e.g.
-    :func:`minhash_band_table` over the persisted index). Without it the
-    probe recomputes the k minhashes over every corpus ids row per
-    batch — the surviving O(corpus) CPU term the r11 clustering curve
-    measured (0.068 ms/doc/batch); with it the corpus half of the
-    band join is a pure columnar scan and only arrivals are hashed.
-    Band keys are deterministic per document, so the pair output is
-    identical either way.
-
-    ``arrival_bands_df``: optionally pass the ARRIVALS' pre-exploded
-    band table under the same layout contract. The streaming batch
-    body persists its arrivals' bands beside the ids index anyway
-    (the accumulating corpus band table) — passing the same tracked
-    frame here means arrivals are hashed ONCE per micro-batch instead
-    of once for the probe and once for the bands write (r12, VERDICT
-    r11 "Next round #5").
+    When ``ids_df`` carries a ``sig`` column (a persisted
+    :func:`signature_table` index, e.g. via
+    :func:`steady_ids_with_arrivals`, whose arrival half hashes only
+    the arrivals), the bands are exploded from it: the corpus half of
+    the band join is a pure columnar scan instead of the k minhashes
+    over every corpus ids row per batch (the O(corpus) CPU term the
+    r11 clustering curve measured, 0.068 ms/doc/batch). A stored
+    ``sig`` is ``MINHASH_K`` long, so ``k`` must equal it. Without
+    ``sig``, every row is hashed here. Signatures are deterministic
+    per document, so the pair output is identical either way.
     """
     n_bands = k // rows_per_band
     if df is None and ids_df is None:
@@ -506,35 +494,16 @@ def minhash_lsh_pairs_incremental(
         )
     if ids_df is None:
         ids_df = flagged_shingle_ids_table(df, id_col, text_col, new_col, n)
-    if corpus_bands_df is not None or arrival_bands_df is not None:
-        # each half is either a pre-exploded band table or pays its
-        # own k-hash signature; filters on the literal is_new flag
-        # fold the other branch of a unioned ids_df away, so the ids
-        # parquet is read exactly once — by the verify join
-        if arrival_bands_df is not None:
-            arr_bands = arrival_bands_df.select(
-                "id", F.lit(True).alias("is_new"), "band_idx", "band_key"
-            )
-        else:
-            arr_sig = ids_df.where(F.col("is_new")).select(
-                "id", "is_new", minhash_signature("ids", k).alias("sig")
-            )
-            arr_bands = _explode_bands(arr_sig, n_bands, rows_per_band)
-        if corpus_bands_df is not None:
-            cor_bands = corpus_bands_df.select(
-                "id", F.lit(False).alias("is_new"), "band_idx", "band_key"
-            )
-        else:
-            cor_sig = ids_df.where(~F.col("is_new")).select(
-                "id", "is_new", minhash_signature("ids", k).alias("sig")
-            )
-            cor_bands = _explode_bands(cor_sig, n_bands, rows_per_band)
-        bands = cor_bands.unionByName(arr_bands)
-    else:
-        sig_df = ids_df.select(
-            "id", "is_new", minhash_signature("ids", k).alias("sig")
+    if "sig" not in ids_df.columns:
+        ids_df = ids_df.select("*", minhash_signature("ids", k).alias("sig"))
+    elif k != MINHASH_K:
+        raise ValueError(
+            f"minhash_lsh_pairs_incremental: ids_df carries a stored sig of "
+            f"MINHASH_K={MINHASH_K} minhashes, which k={k} cannot band"
         )
-        bands = _explode_bands(sig_df, n_bands, rows_per_band)
+    bands = _explode_bands(
+        ids_df.select("id", "is_new", "sig"), n_bands, rows_per_band
+    )
     cand = (
         bands.where(F.col("is_new"))
         .select("id", "band_idx", "band_key")

@@ -943,38 +943,33 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _steady_corpus_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus's persisted (id, ids) n=3 shingle-id table, shared by
-    every lexical steady probe."""
-    return staged_once(
-        spark, sf_dir, "idx",
-        lambda: D.shingle_ids_table(
+    """The corpus's persisted (id, ids, sig) n=3 shingle-id and MinHash
+    signature index, shared by every lexical steady probe."""
+
+    def build() -> DataFrame:
+        ids = D.shingle_ids_table(
             steady_split(load_table(spark, sf_dir, "documents"))[0],
             "doc_id", "text", 3,
-        ),
-    )
+        )
+        # the staged write is its one reader: drop the tracked cache
+        # before anything fills it
+        ids.unpersist()
+        return D.signature_table(ids)
 
-
-def _steady_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus's persisted band table: probes hash only arrivals
-    instead of re-hashing the whole corpus index."""
-    return staged_once(
-        spark, sf_dir, "bands",
-        lambda: D.minhash_band_table(_steady_corpus_index(spark, sf_dir)),
-    )
+    return staged_once(spark, sf_dir, "idx", build)
 
 
 def _steady_minhash_pairs(
     spark: SparkSession, sf_dir: str, arrivals: DataFrame
 ) -> DataFrame:
     """The arrival-touching MinHash pairs of the steady probe: the
-    arrivals' shingle ids unioned under the persisted corpus index,
-    banded against the persisted corpus band table."""
+    arrivals' shingle ids and signatures unioned under the persisted
+    corpus index, whose stored ``sig`` bands the corpus half."""
     return D.minhash_lsh_pairs_incremental(
         None, "doc_id", "text", "__nw",
         ids_df=D.steady_ids_with_arrivals(
             arrivals, _steady_corpus_index(spark, sf_dir)
         ),
-        corpus_bands_df=_steady_corpus_bands(spark, sf_dir),
     )
 
 

@@ -22,12 +22,15 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oamap_spark.session import positive_int_env
+
+_log = logging.getLogger(__name__)
 
 
 @contextlib.contextmanager
@@ -381,28 +384,20 @@ def incremental_dedup_batch_body(
     from oamap_spark.cache import track
     from oamap_spark.operators.dedup import (
         flagged_shingle_ids_table,
-        minhash_band_table,
         minhash_lsh_pairs_incremental,
+        signature_table,
     )
 
     bspark = batch.sparkSession
-    arr = flagged_shingle_ids_table(
+    ids = flagged_shingle_ids_table(
         batch.withColumn("__nw", F.lit(True)), "doc_id", "text", "__nw", 3
     )
-    # arrival band table, computed ONCE and tracked: the probe's
-    # arrival half reads it AND it is what accumulates into the corpus
-    # band table — before r12 the arrivals were minhashed twice per
-    # micro-batch, once inside the pair probe and once for the bands
-    # write (VERDICT r11 "Next round #5").
-    arr_bands = track(minhash_band_table(arr))
-    # the corpus BAND table accumulates beside the ids index (r11:
-    # same lever as the steady-state probes' persisted band table —
-    # without it every micro-batch recomputes the k=16 minhashes over
-    # the WHOLE accumulated corpus, an O(corpus)/batch term that grows
-    # with every batch; with it the corpus half of the band join is a
-    # columnar scan and only arrivals are hashed). Derived path, not a
-    # new parameter, so replay-idempotency callers are unchanged.
-    bands_dir = index_dir.rstrip("/") + "_bands"
+    # ONE tracked arrival frame, signatures included: the probe's
+    # arrival half and the index write both read it, so arrivals are
+    # tokenized and minhashed once per micro-batch. The shingle
+    # table's own cache is dropped before anything fills it.
+    ids.unpersist()
+    arr = track(signature_table(ids))
     # batch < batch_id: a REPLAYED micro-batch (at-least-once
     # foreachBatch) must not read its own first attempt's signatures
     # back as corpus — duplicate ids would fan every verify-join pair
@@ -411,67 +406,30 @@ def incremental_dedup_batch_body(
     # raises on any failure — a silently-dropped index would re-emit
     # nothing for true cross-batch dups.
     idx_batches = partition_ids(index_dir, "batch", below=batch_id)
-    ids_df, corpus_bands = arr, None
+    _log.info(
+        "incremental dedup batch %d: reading index batches %s of %s",
+        batch_id, sorted(idx_batches), index_dir,
+    )
+    ids_df = arr
     if idx_batches:
-        corpus = (
+        ids_df = (
             bspark.read.parquet(index_dir)
             .where(F.col("batch") < batch_id)
-            .select("id", F.lit(False).alias("is_new"), "ids")
-        )
-        ids_df = corpus.unionByName(arr)
-        # COVERAGE check, not existence (ADVICE r11 high): on the
-        # pre-bands upgrade path the first post-upgrade batch writes
-        # only its own bands partition, so a bare existence check
-        # would let every later batch treat that one partition as the
-        # complete corpus band table and silently drop every
-        # arrival-vs-old-corpus pair. Any index batch whose bands
-        # partition is missing is BACKFILLED here from its persisted
-        # ids (deterministic band keys → replay/backfill idempotent;
-        # one-time cost, after which the loop is covered forever).
-        have = partition_ids(bands_dir, "batch", below=batch_id)
-        for b in sorted(idx_batches - have):
-            minhash_band_table(
-                bspark.read.parquet(os.path.join(index_dir, f"batch={b}"))
-            ).write.mode("overwrite").parquet(
-                os.path.join(bands_dir, f"batch={b}")
-            )
-        corpus_bands = (
-            bspark.read.parquet(bands_dir)
-            .where(F.col("batch") < batch_id)
-            .select("id", "band_idx", "band_key")
+            .select("id", F.lit(False).alias("is_new"), "ids", "sig")
+            .unionByName(arr)
         )
     pairs = minhash_lsh_pairs_incremental(
-        None, "doc_id", "text", "__nw", ids_df=ids_df,
-        corpus_bands_df=corpus_bands, arrival_bands_df=arr_bands,
+        None, "doc_id", "text", "__nw", ids_df=ids_df
     )
-    # pairs BEFORE index/bands writes: the pair plan reads both dirs
+    # pairs BEFORE the index write: the pair plan reads the index dir
     # and must not see this batch's own rows on the corpus side
     pairs.write.mode("overwrite").parquet(
         os.path.join(pairs_dir, f"batch={batch_id}")
     )
-    # index + bands writes are independent of each other and both read
-    # the tracked arr/arr_bands caches the pairs write just
-    # materialized — run them as concurrent jobs (guide §2.6) instead
-    # of two serial driver round-trips. Same per-batch overwrite
-    # idempotency as before; band keys are deterministic per document,
-    # so a replay is byte-equal.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fi = pool.submit(
-            lambda: arr.select("id", "ids")
-            .write.mode("overwrite")
-            .parquet(os.path.join(index_dir, f"batch={batch_id}"))
-        )
-        fb = pool.submit(
-            lambda: arr_bands.write.mode("overwrite").parquet(
-                os.path.join(bands_dir, f"batch={batch_id}")
-            )
-        )
-        fi.result()
-        fb.result()
+    arr.select("id", "ids", "sig").write.mode("overwrite").parquet(
+        os.path.join(index_dir, f"batch={batch_id}")
+    )
     arr.unpersist()
-    arr_bands.unpersist()
 
 
 def foreach_batch_incremental_minhash(
@@ -481,11 +439,11 @@ def foreach_batch_incremental_minhash(
     micro-batch of documents is deduped against the ACCUMULATED corpus
     via the asymmetric incremental band join
     (operators/dedup.py:minhash_lsh_pairs_incremental), fed from a
-    persisted parquet signature index — the batch tokenizes ONLY its
-    own documents; the corpus half is read back as cached shingle-id
-    arrays written by earlier batches (a production index would
-    persist band keys too; the ids table is the part whose rebuild
-    costs a corpus re-scan, which is what this avoids).
+    persisted parquet signature index — the batch tokenizes and
+    minhashes ONLY its own documents; the corpus half is read back as
+    the (id, ids, sig) rows earlier batches wrote, so the probe bands
+    the stored signatures and no batch re-scans or re-hashes the
+    corpus.
 
     Every near-dup pair is emitted exactly ONCE — in the micro-batch
     where its LATER member arrives (same-batch pairs once, by the
@@ -533,15 +491,34 @@ def cluster_maintenance_batch_body(
     id — never its own first attempt — and ``overwrite``s its own
     generation directory; apply_components_update is deterministic
     and idempotent on its inputs, so the rewrite is byte-equal in
-    content. Module-level so the contract is directly testable."""
+    content. Module-level so the contract is directly testable.
+
+    Persisted-state guard: ``asg_dir`` and ``index_dir`` must both
+    hold state from batches below ``batch_id`` or both hold none. A
+    fresh assignment dir paired with an existing index would fold
+    against an empty assignment and silently drop every earlier
+    cluster; a fresh index beside an existing assignment would emit
+    no pair against the earlier corpus. Either raises
+    ``RuntimeError`` before anything is written."""
     from oamap_spark.operators.clustering import apply_components_update
 
+    gen = max(partition_ids(asg_dir, "gen", below=batch_id), default=None)
+    idx_batches = partition_ids(index_dir, "batch", below=batch_id)
+    if (gen is None) != (not idx_batches):
+        raise RuntimeError(
+            f"cluster maintenance batch {batch_id}: below it, {asg_dir} "
+            f"holds gen={gen} but {index_dir} holds index batches "
+            f"{sorted(idx_batches)}; one dir is fresh and the other is not"
+        )
+    _log.info(
+        "cluster maintenance batch %d: reading gen=%s of %s",
+        batch_id, gen, asg_dir,
+    )
     incremental_dedup_batch_body(batch, batch_id, index_dir, pairs_dir)
     bspark = batch.sparkSession
     pairs = bspark.read.parquet(
         os.path.join(pairs_dir, f"batch={batch_id}")
     ).select("id_a", "id_b")
-    gen = max(partition_ids(asg_dir, "gen", below=batch_id), default=None)
     if gen is not None:
         asg = bspark.read.parquet(os.path.join(asg_dir, f"gen={gen}"))
     else:  # first batch: no prior state

@@ -114,6 +114,7 @@ SMOKE_NODEIDS = frozenset(
         "test_layout.py::test_count_le_matches_linear_scan",
         "test_streaming.py::test_streaming_oracles",
         "test_llm_ops.py::test_minhash_incremental_equals_filtered_batch",
+        "test_llm_ops.py::test_incremental_dedup_batch_replay_is_idempotent",
         "test_sampling_clustering.py::test_apply_components_update_empty_batch_is_identity",
         "test_ops_property.py::test_compiler_string_subscript_matches_python",
         "test_plan_census.py::test_plan_counts_groupby_has_one_exchange",

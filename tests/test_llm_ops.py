@@ -1069,7 +1069,11 @@ def test_incremental_dedup_batch_replay_is_idempotent(spark, tmp_path):
     with the same batch_id (crash-after-write, checkpoint-not-
     committed) must leave BOTH sinks content-identical — in particular
     the replay must not read its own first attempt's signatures back
-    as corpus, which would fan every verify-join pair out 2-4x."""
+    as corpus, which would fan every verify-join pair out 2-4x. Every
+    index row carries its ``MINHASH_K``-long signature ``sig`` (the
+    probe bands it instead of re-hashing the corpus), and the replay
+    rewrites the index partition content-identically."""
+    from oamap_spark.operators.dedup import MINHASH_K
     from oamap_spark.streaming.pipelines import incremental_dedup_batch_body
 
     d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -1088,6 +1092,18 @@ def test_incremental_dedup_batch_replay_is_idempotent(spark, tmp_path):
     )
     assert first  # non-vacuous: cross/within-batch pairs exist
 
+    def index_rows(batch):
+        return sorted(
+            (r["id"], tuple(r["ids"]), tuple(r["sig"]))
+            for r in spark.read.parquet(index_dir)
+            .where(F.col("batch") == batch)
+            .collect()
+        )
+
+    first_idx = index_rows(1)
+    assert len(index_rows(0)) == b0.count() and len(first_idx) == b1.count()
+    assert {len(r[2]) for r in index_rows(0) + first_idx} == {MINHASH_K}
+
     # the crash-replay: same batch, same id, index already contains
     # this batch's own signatures from the first attempt
     incremental_dedup_batch_body(b1, 1, index_dir, pairs_dir)
@@ -1098,9 +1114,10 @@ def test_incremental_dedup_batch_replay_is_idempotent(spark, tmp_path):
         .collect()
     )
     assert again == first
-    # index partition also rewritten, not duplicated
+    # index partition also rewritten, not duplicated, and identical
     idx = spark.read.parquet(index_dir)
     assert idx.count() == idx.select("id").distinct().count()
+    assert index_rows(1) == first_idx
 
 
 def test_cluster_maintenance_batch_replay_is_idempotent(spark, tmp_path):
@@ -1134,6 +1151,61 @@ def test_cluster_maintenance_batch_replay_is_idempotent(spark, tmp_path):
     # fixpoint sanity: every cluster id is a member node of the gen
     nodes = {r[0] for r in first}
     assert {r[1] for r in first} <= nodes
+
+
+def _tiny_docs(spark, ids):
+    """A few documents, near-copies of one text, for the stream batch
+    bodies' bookkeeping tests (the dedup itself is pinned elsewhere)."""
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    return spark.createDataFrame(
+        [(i, base if i % 2 else base + " today") for i in ids],
+        "doc_id long, text string",
+    )
+
+
+def test_cluster_maintenance_mismatched_state_dirs_raise(spark, tmp_path):
+    """Persisted-state guard: a fresh assignment dir paired with an
+    index that already holds earlier batches must fail loudly before
+    anything is written, not fold against an empty assignment and drop
+    every earlier cluster; so must the mirror pairing, a fresh index
+    beside an existing assignment. Batch 0 on empty dirs still folds."""
+    from oamap_spark.streaming.pipelines import cluster_maintenance_batch_body
+
+    index_dir, pairs_dir = str(tmp_path / "index"), str(tmp_path / "pairs")
+    asg_dir = str(tmp_path / "asg")
+    cluster_maintenance_batch_body(
+        _tiny_docs(spark, [1, 2]), 0, index_dir, pairs_dir, asg_dir
+    )
+    assert spark.read.parquet(f"{asg_dir}/gen=0").count() == 2
+    fresh_asg = str(tmp_path / "asg_fresh")
+    fresh_index = str(tmp_path / "index_fresh")
+    for idx, asg in ((index_dir, fresh_asg), (fresh_index, asg_dir)):
+        with pytest.raises(RuntimeError) as err:
+            cluster_maintenance_batch_body(
+                _tiny_docs(spark, [3, 4]), 1, idx, pairs_dir, asg
+            )
+        assert idx in str(err.value) and asg in str(err.value)
+    assert not (tmp_path / "pairs" / "batch=1").exists()
+
+
+def test_stream_batch_bodies_log_what_they_read(spark, tmp_path, caplog):
+    """Both batch bodies log which index batches and which assignment
+    generation they read, from the listings they already take; the
+    stream persists exactly its index, pairs and assignment dirs."""
+    import logging
+
+    from oamap_spark.streaming import pipelines as P
+
+    caplog.set_level(logging.INFO, logger=P.__name__)
+    dirs = [str(tmp_path / x) for x in ("index", "pairs", "asg")]
+    for i, ids in enumerate(([1, 2], [3, 4])):
+        P.cluster_maintenance_batch_body(_tiny_docs(spark, ids), i, *dirs)
+    log = caplog.text
+    assert f"batch 0: reading index batches [] of {dirs[0]}" in log
+    assert f"batch 1: reading index batches [0] of {dirs[0]}" in log
+    assert f"batch 0: reading gen=None of {dirs[2]}" in log
+    assert f"batch 1: reading gen=0 of {dirs[2]}" in log
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["asg", "index", "pairs"]
 
 
 def test_stream_incremental_dedup_cumulative_equals_batch(spark, queries):
@@ -1295,11 +1367,12 @@ def test_all_pairs_jaccard_threshold_domain(spark):
 
 
 def test_band_layout_constants_match_probe_defaults(spark):
-    """ADVICE r11 #3: every persisted band table is built by
-    minhash_band_table from the shared module constants while the pair
-    probes rely on keyword defaults — if either drifts, persisted band
-    tables silently desync from the probe layout and pairs are missed.
-    Pin the agreement."""
+    """ADVICE r11 #3: every persisted signature index stores a
+    ``MINHASH_K``-long ``sig`` (signature_table) while the pair probes
+    band it with their keyword defaults — if either drifts, the
+    persisted index silently desyncs from the probe layout and pairs
+    are missed. Pin the agreement, the band explode of a stored sig,
+    and that a probe refuses to band a stored sig with another k."""
     import inspect
 
     from oamap_spark.operators import dedup as D
@@ -1310,9 +1383,16 @@ def test_band_layout_constants_match_probe_defaults(spark):
         assert sig.parameters["k"].default == D.MINHASH_K, fn.__name__
         assert sig.parameters["rows_per_band"].default == D.BAND_ROWS, fn.__name__
     ids = spark.createDataFrame([(1, [11, 22, 33])], "id long, ids array<long>")
-    bands = D.minhash_band_table(ids).collect()
+    sigs = D.signature_table(ids)
+    assert sigs.columns == ["id", "ids", "sig"]
+    bands = D._explode_bands(sigs, D.N_BANDS, D.BAND_ROWS).collect()
     assert [r["band_idx"] for r in bands] == list(range(D.N_BANDS))
     assert {len(r["band_key"].split("_")) for r in bands} == {D.BAND_ROWS}
+    flagged = sigs.withColumn("is_new", F.lit(True))
+    with pytest.raises(ValueError, match="MINHASH_K"):
+        D.minhash_lsh_pairs_incremental(
+            None, "doc_id", "text", "__nw", k=D.MINHASH_K * 2, ids_df=flagged
+        )
 
 
 @pytest.mark.parametrize("builder,ceiling", [("bands", 150), ("flagged_ids", 350)])
@@ -1321,8 +1401,8 @@ def test_minhash_builders_build_in_few_py4j_calls(spark, monkeypatch, builder, c
     stream micro-batch: the MinHash signature, the band explode and the
     shingle-id builders are each ONE parsed SQL expression, not a
     Column tree assembled one py4j round trip per node (the tree form
-    took ~1,900 calls for the band table and ~700 for the flagged
-    shingle-id table). The count of py4j commands does not depend on
+    took ~1,900 calls for the signature table plus band explode and
+    ~700 for the flagged shingle-id table). The count of py4j commands does not depend on
     host load, so the ceiling is a stable pin."""
     from oamap_spark import cache
     from oamap_spark.operators import dedup as D
@@ -1330,7 +1410,9 @@ def test_minhash_builders_build_in_few_py4j_calls(spark, monkeypatch, builder, c
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     ids = spark.createDataFrame([(1, [11, 22, 33])], "id long, ids array<long>")
     build = {
-        "bands": lambda: D.minhash_band_table(ids),
+        "bands": lambda: D._explode_bands(
+            D.signature_table(ids), D.N_BANDS, D.BAND_ROWS
+        ),
         "flagged_ids": lambda: D.flagged_shingle_ids_table(
             docs.withColumn("__nw", F.lit(True)), "doc_id", "text", "__nw", 3
         ),
@@ -1346,98 +1428,3 @@ def test_minhash_builders_build_in_few_py4j_calls(spark, monkeypatch, builder, c
     monkeypatch.undo()
     cache.sweep()
     assert 0 < len(calls) <= ceiling, f"{builder}: {len(calls)} py4j calls"
-
-
-def test_incremental_dedup_batch_bands_accumulate_and_fallback(spark, tmp_path):
-    """r11: each micro-batch persists its BAND table beside the ids
-    index so later batches probe corpus bands instead of re-signing
-    the whole accumulated corpus (the O(corpus)/batch term). Pin the
-    new internals: (a) bands accumulate per batch=<id> partition and a
-    replay rewrites its own partition content-identically (band keys
-    are deterministic); (b) the pair output is IDENTICAL when the
-    bands dir is absent — since r12 a missing corpus bands partition
-    is BACKFILLED from the persisted ids (ADVICE r11 high: the old
-    existence-only fallback re-signed once, wrote only its own batch's
-    bands, and every LATER batch then read that single partition as
-    the complete corpus band table, silently dropping every
-    arrival-vs-old-corpus pair forever). The coverage assert below is
-    the pin: after the upgrade-path replay, bands partitions must
-    again cover every ids partition."""
-    import shutil
-
-    from oamap_spark.streaming.pipelines import incremental_dedup_batch_body
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    src_num = F.substring("source", 4, 10).cast("int")
-    b0, b1 = d.where(src_num < 10), d.where(src_num >= 10)
-    index_dir = str(tmp_path / "index")
-    pairs_dir = str(tmp_path / "pairs")
-    bands_dir = index_dir + "_bands"
-
-    incremental_dedup_batch_body(b0, 0, index_dir, pairs_dir)
-    incremental_dedup_batch_body(b1, 1, index_dir, pairs_dir)
-    bands = spark.read.parquet(bands_dir)
-    assert sorted(
-        r["batch"] for r in bands.select("batch").distinct().collect()
-    ) == [0, 1]
-    # 8 bands per document in each batch's partition
-    n0 = bands.where(F.col("batch") == 0).count()
-    assert n0 == 8 * b0.count()
-    with_bands = sorted(
-        tuple(r)
-        for r in spark.read.parquet(pairs_dir)
-        .select("id_a", "id_b", "jaccard")
-        .collect()
-    )
-    assert with_bands
-
-    # replay batch 1: bands partition rewritten, content identical
-    first_bands = sorted(
-        tuple(r)
-        for r in bands.where(F.col("batch") == 1)
-        .select("id", "band_idx", "band_key")
-        .collect()
-    )
-    incremental_dedup_batch_body(b1, 1, index_dir, pairs_dir)
-    again_bands = sorted(
-        tuple(r)
-        for r in spark.read.parquet(bands_dir)
-        .where(F.col("batch") == 1)
-        .select("id", "band_idx", "band_key")
-        .collect()
-    )
-    assert again_bands == first_bands
-
-    # upgrade path: no bands dir at all -> same pairs, and the missing
-    # corpus bands partitions are backfilled so the NEXT batch's
-    # coverage check finds a complete table (the poisoned-next-batch
-    # scenario the r11 existence check missed)
-    shutil.rmtree(bands_dir)
-    incremental_dedup_batch_body(b1, 1, index_dir, pairs_dir)
-    no_bands = sorted(
-        tuple(r)
-        for r in spark.read.parquet(pairs_dir)
-        .select("id_a", "id_b", "jaccard")
-        .collect()
-    )
-    assert no_bands == with_bands
-    import glob
-    import os as _os
-
-    def parts(d):
-        return sorted(
-            int(_os.path.basename(p).split("=")[1])
-            for p in glob.glob(_os.path.join(d, "batch=*"))
-        )
-
-    assert parts(bands_dir) == parts(index_dir) == [0, 1]
-    # and the backfilled batch-0 partition is content-identical to the
-    # one the normal loop wrote (deterministic band keys)
-    refilled = sorted(
-        tuple(r)
-        for r in spark.read.parquet(bands_dir)
-        .where(F.col("batch") == 0)
-        .select("id", "band_idx", "band_key")
-        .collect()
-    )
-    assert refilled and len(refilled) == n0

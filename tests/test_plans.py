@@ -8,6 +8,8 @@ touch guarantee), and the hot path inside WholeStageCodegen."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from oamap_spark.plans import audit
@@ -739,6 +741,24 @@ def test_bloom_prefilter_below_join(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", keep)
 
 
+def _assert_minhash_only_on_arrivals(p: str) -> None:
+    """In a formatted plan of a steady MinHash probe, the corpus half
+    of the band join reads ``sig`` from the persisted index, and
+    ``array_min`` (the MinHash) reads only ids that no index scan
+    produced: a corpus half re-hashed per probe — before or after the
+    union, whose output keeps its first child's attributes — would
+    hash an ids attribute of an ``oamap_steady_idx`` scan."""
+    idx = [
+        b for b in p.split("\n\n")
+        if "Scan parquet" in b and "oamap_steady_idx" in b
+    ]
+    assert any("sig:array<bigint>" in b for b in idx), p[:2000]
+    outputs = re.findall(r"Output \[\d+\]: \[(.*)\]", "\n".join(idx))
+    idx_attrs = set(re.findall(r"\w+#\d+", " ".join(outputs)))
+    hashed = set(re.findall(r"array_min\(transform\((\w+#\d+)", p))
+    assert hashed and not hashed & idx_attrs, (hashed, idx_attrs)
+
+
 def test_steady_state_probe_reads_persisted_index(spark, queries):
     """dedup_minhash_incremental_steady's whole point: the corpus half
     comes from the PERSISTED parquet signature index — the plan must
@@ -750,10 +770,10 @@ def test_steady_state_probe_reads_persisted_index(spark, queries):
     # one md5-bearing tokenize branch: the arrivals'. The corpus side
     # must not re-derive signatures from text.
     assert p.count("documents.parquet") == 1, p.count("documents.parquet")
-    # r11: the corpus half of the band join is the persisted BAND
-    # table — re-signing the corpus index per batch (the O(corpus)
-    # k-hash term) would drop the bands scan from the plan
-    assert "oamap_steady_bands" in p, p[:2000]
+    # the corpus half of the band join bands the persisted sig —
+    # re-signing the corpus index per batch is the O(corpus) k-hash
+    # term the stored signatures exist to remove
+    _assert_minhash_only_on_arrivals(p)
 
 
 def test_containment_steady_probe_reads_persisted_index(spark, queries):
@@ -839,9 +859,9 @@ def test_clusters_steady_probes_persisted_state(spark, queries, monkeypatch):
     out = audit.plan_string(df)
     assert "oamap_steady_idx" in p, p[:2000]
     assert "oamap_steady_clusters" in p, p[:2000]
-    # r11: the pair probe reads the persisted corpus band table
-    # instead of re-signing the corpus index per batch
-    assert "oamap_steady_bands" in p, p[:2000]
+    # the pair probe bands the persisted corpus sig instead of
+    # re-signing the corpus index per batch
+    _assert_minhash_only_on_arrivals(p)
     assert p.count("documents.parquet") == 1, p.count("documents.parquet")
     assert out.count("documents.parquet") == 1, out
     for plan in (p, out):

@@ -99,8 +99,8 @@ def test_staged_once_path_carries_steady_prefix(spark, monkeypatch):
 
 def test_steady_probe_second_call_runs_no_write_job(spark, monkeypatch):
     """The first dedup_minhash_incremental_steady call in a process
-    writes the corpus index and band table; the second runs only the
-    jobs that reading the documents table runs on its own."""
+    writes the corpus signature index; the second runs only the jobs
+    that reading the documents table runs on its own."""
     import uuid
 
     from oamap_spark.queries.llm_dedup import dedup_minhash_incremental_steady
@@ -122,4 +122,4 @@ def test_steady_probe_second_call_runs_no_write_job(spark, monkeypatch):
     first = jobs_of(lambda: dedup_minhash_incremental_steady(spark, SF_SMOKE))
     second = jobs_of(lambda: dedup_minhash_incremental_steady(spark, SF_SMOKE))
     assert first > read_only and second == read_only, (read_only, first, second)
-    assert set(staging._STAGED) == {(SF_SMOKE, "idx"), (SF_SMOKE, "bands")}
+    assert set(staging._STAGED) == {(SF_SMOKE, "idx")}

@@ -2,15 +2,17 @@
 daily maintenance cost vs the full re-clustering it replaces.
 
 Per SF: snapshot the corpus state once (signature index = the
-persisted ``(id, ids)`` shingle table over src0-17 docs; cluster
+persisted ``(id, ids, sig)`` shingle-id and MinHash signature table,
+``operators/dedup.py:signature_table``, over src0-17 docs; cluster
 assignment = batch CC over the corpus's banded MinHash pairs), then
 time the two ways a pipeline can absorb the src18-19 arrival batch:
 
 - ``incr_sec``  the maintenance loop: tokenize ONLY the arrivals,
   probe the persisted index for arrival-touching pairs
-  (asymmetric band join), fold them into the persisted assignment
-  with ``apply_components_update`` (rep-graph contraction — corpus
-  graph never re-shuffled), write the next assignment;
+  (asymmetric band join over the stored signatures), fold them into
+  the persisted assignment with ``apply_components_update``
+  (rep-graph contraction — corpus graph never re-shuffled), write
+  the next assignment;
 - ``full_sec``  the alternative: re-tokenize ALL documents, rebuild
   the full banded pair graph, run batch CC from scratch, write.
 
@@ -103,10 +105,9 @@ def main() -> None:
 
         # one-time corpus snapshot: persisted signature index + CC
         t0 = time.perf_counter()
-        D.flagged_shingle_ids_table(
-            corpus.withColumn("__nw", F.lit(False)), "doc_id", "text",
-            "__nw", N,
-        ).select("id", "ids").write.parquet(idx)
+        D.signature_table(
+            D.shingle_ids_table(corpus, "doc_id", "text", N)
+        ).write.parquet(idx)
         corpus_pairs = D.minhash_lsh_pairs(
             corpus, "doc_id", "text", k=K, rows_per_band=RPB, threshold=THR
         )
