@@ -53,6 +53,18 @@ def track(
     return df
 
 
+def release(df: DataFrame) -> None:
+    """Unpersist ``df`` now and drop it from the registry (matched by
+    identity): for a caller done with a tracked frame before the next
+    :func:`sweep`. A bare ``unpersist()`` leaves the entry behind, so a
+    loop that never sweeps (a foreachBatch stream) would grow the
+    registry by one frame and its JVM handle per call. If the
+    unpersist raises, the entry stays for a later sweep."""
+    df.unpersist()
+    with _LOCK:
+        _FRAMES[:] = [f for f in _FRAMES if f is not df]
+
+
 def sweep(blocking: bool = False) -> int:
     """Unpersist every tracked frame; returns how many were swept.
     Safe to call with no session activity in flight; frames already

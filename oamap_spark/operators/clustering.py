@@ -36,9 +36,11 @@ from __future__ import annotations
 
 import logging
 
+import pyarrow as pa
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 _log = logging.getLogger(__name__)
@@ -49,6 +51,23 @@ _log = logging.getLogger(__name__)
 # large enough to amortize the distributed fixpoint's per-iteration
 # round trips.
 DRIVER_FINISH_MAX_EDGES = 100_000
+
+
+def local_frame(
+    spark: SparkSession, schema: StructType, columns: list[list]
+) -> DataFrame:
+    """A frame of driver-side column values, built from a
+    ``pyarrow.Table``. Spark plans it as a local relation
+    (``LocalTableScan``): no RDD, no pickling and no Python worker,
+    whatever the session's Arrow confs say. A Python list handed to
+    ``createDataFrame`` is instead a pickled RDD, and every action
+    that reads it starts Python workers."""
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _refuse_all_pairs_edges(pairs: DataFrame, op: str) -> None:
@@ -252,9 +271,9 @@ def _contracted_fixpoint(
 
     The contracted edges are collected in ONE action, bounded at
     ``DRIVER_FINISH_MAX_EDGES + 1`` rows. Up to the bound they are
-    finished on the driver and both results come back as small local
-    frames; past it :func:`connected_components_min_id` runs over them
-    unchanged."""
+    finished on the driver and both results come back as Arrow-built
+    local relations (:func:`_driver_finish`); past it
+    :func:`connected_components_min_id` runs over them unchanged."""
     _refuse_all_pairs_edges(pairs, "incremental clustering")
     rep = assignment.select(
         F.col("node").alias("__n"), F.col("cluster_id").alias("__rep")
@@ -321,8 +340,10 @@ def _driver_finish(
     """:func:`_contracted_fixpoint`'s results from its collected edge
     rows: union-find with path halving, the smaller root always
     winning, so every root is its component's min id — the same
-    labels the distributed fixpoint converges to. Column types come
-    from ``ends``, i.e. from the input schemas."""
+    labels the distributed fixpoint converges to. Both frames are
+    Arrow-built local relations (:func:`local_frame`), so the relabel
+    broadcast and the write that reads them start no Python worker.
+    Column types come from ``ends``, i.e. from the input schemas."""
     parent: dict = {}
 
     def find(x):
@@ -342,17 +363,19 @@ def _driver_finish(
 
     types = {f.name: f.dataType for f in ends.schema.fields}
     spark = ends.sparkSession
-    comp_rep = spark.createDataFrame(
-        [(n, find(n)) for n in parent],
+    reps, nodes = list(parent), list(labels)
+    comp_rep = local_frame(
+        spark,
         StructType(
             [
                 StructField("node", types["__ra"]),
                 StructField("cluster_id", types["__ra"]),
             ]
         ),
+        [reps, [find(n) for n in reps]],
     )
-    label_df = spark.createDataFrame(
-        [(n, c, f) for n, (c, f) in labels.items()],
+    label_df = local_frame(
+        spark,
         StructType(
             [
                 StructField("node", types["__a"]),
@@ -360,6 +383,7 @@ def _driver_finish(
                 StructField("__fresh", types["__fa"]),
             ]
         ),
+        [nodes, [labels[n][0] for n in nodes], [labels[n][1] for n in nodes]],
     )
     return label_df, comp_rep
 
@@ -385,11 +409,12 @@ def apply_components_update(
     (arrivals, prior singletons) enter with their merged label. The
     merge itself is finished on the driver for a contracted graph of
     at most ``DRIVER_FINISH_MAX_EDGES`` edges, so both the relabel map
-    and the new nodes are small local frames; larger batches fall back
-    to the distributed fixpoint. The result is again a min-id fixpoint
-    — bit-identical to batch CC over E_c ∪ pairs on the full node set
-    on either path (pinned by tests, incl. idempotence: re-applying
-    the same batch is a no-op)."""
+    and the new nodes are Arrow-built local relations that start no
+    Python worker; larger batches fall back to the distributed
+    fixpoint. The result is again a min-id fixpoint — bit-identical
+    to batch CC over E_c ∪ pairs on the full node set on either path
+    (pinned by tests, incl. idempotence: re-applying the same batch is
+    a no-op)."""
     labels, comp_rep = _contracted_fixpoint(pairs, assignment, id_a, id_b)
     relabel = comp_rep.select(
         F.col("node").alias("__rep"), F.col("cluster_id").alias("__new")

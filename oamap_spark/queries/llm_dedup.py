@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oamap_spark.cache import release
 from oamap_spark.functions import text as X
 from oamap_spark.operators import dedup as D
 from oamap_spark.queries.registry import register
@@ -953,7 +954,7 @@ def _steady_corpus_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the staged write is its one reader: drop the tracked cache
         # before anything fills it
-        ids.unpersist()
+        release(ids)
         return D.signature_table(ids)
 
     return staged_once(spark, sf_dir, "idx", build)

@@ -27,6 +27,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oamap_spark.cache import release
+
 _ROOTS: list[str] = []
 
 
@@ -79,7 +81,7 @@ def staged_once(
             path = staging_path(f"oamap_steady_{name}_", name)
             df.write.parquet(path)
             if df.is_cached:  # a cache.track'ed build is dead weight now
-                df.unpersist()
+                release(df)
             reader = _STAGED[key] = spark.read.parquet(path)
     return reader
 

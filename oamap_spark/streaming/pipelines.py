@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from oamap_spark.session import positive_int_env
 
@@ -381,7 +382,7 @@ def incremental_dedup_batch_body(
     testable (call it twice with the same batch_id: the second run
     must leave both partitions byte-identical in content). See
     :func:`foreach_batch_incremental_minhash` for the invariants."""
-    from oamap_spark.cache import track
+    from oamap_spark.cache import release, track
     from oamap_spark.operators.dedup import (
         flagged_shingle_ids_table,
         minhash_lsh_pairs_incremental,
@@ -395,8 +396,10 @@ def incremental_dedup_batch_body(
     # ONE tracked arrival frame, signatures included: the probe's
     # arrival half and the index write both read it, so arrivals are
     # tokenized and minhashed once per micro-batch. The shingle
-    # table's own cache is dropped before anything fills it.
-    ids.unpersist()
+    # table's own cache is dropped before anything fills it, and both
+    # frames leave the tracked registry here: nothing sweeps while a
+    # stream runs.
+    release(ids)
     arr = track(signature_table(ids))
     # batch < batch_id: a REPLAYED micro-batch (at-least-once
     # foreachBatch) must not read its own first attempt's signatures
@@ -429,7 +432,7 @@ def incremental_dedup_batch_body(
     arr.select("id", "ids", "sig").write.mode("overwrite").parquet(
         os.path.join(index_dir, f"batch={batch_id}")
     )
-    arr.unpersist()
+    release(arr)
 
 
 def foreach_batch_incremental_minhash(
@@ -500,7 +503,10 @@ def cluster_maintenance_batch_body(
     cluster; a fresh index beside an existing assignment would emit
     no pair against the earlier corpus. Either raises
     ``RuntimeError`` before anything is written."""
-    from oamap_spark.operators.clustering import apply_components_update
+    from oamap_spark.operators.clustering import (
+        apply_components_update,
+        local_frame,
+    )
 
     gen = max(partition_ids(asg_dir, "gen", below=batch_id), default=None)
     idx_batches = partition_ids(index_dir, "batch", below=batch_id)
@@ -522,7 +528,11 @@ def cluster_maintenance_batch_body(
     if gen is not None:
         asg = bspark.read.parquet(os.path.join(asg_dir, f"gen={gen}"))
     else:  # first batch: no prior state
-        asg = bspark.createDataFrame([], "node long, cluster_id long")
+        asg = local_frame(
+            bspark,
+            StructType([StructField(c, LongType()) for c in ("node", "cluster_id")]),
+            [[], []],
+        )
     apply_components_update(asg, pairs).write.mode("overwrite").parquet(
         os.path.join(asg_dir, f"gen={batch_id}")
     )

@@ -61,3 +61,35 @@ def test_sweep_idempotent_and_clearcache_compatible(spark):
     spark.catalog.clearCache()  # out-of-band clear first
     assert cache.sweep() >= 1   # handles still tracked; unpersist is a no-op
     assert cache.sweep() == 0
+
+
+def test_release_unpersists_and_untracks_only_that_frame(spark):
+    """release() unpersists one tracked frame and drops exactly its
+    registry entry; the other tracked frame stays for the sweep."""
+    cache.sweep()
+    a = cache.track(spark.range(3))
+    b = cache.track(spark.range(3))
+    cache.release(a)
+    assert not a.is_cached and b.is_cached
+    assert cache.tracked_count() == 1
+    assert cache.sweep() == 1
+
+
+def test_stream_dedup_body_leaves_registry_flat(spark, tmp_path):
+    """A foreachBatch stream never sweeps, so each micro-batch of the
+    dedup body must hand back every frame it tracked: N batches leave
+    tracked_count() where it started."""
+    from oamap_spark.streaming.pipelines import incremental_dedup_batch_body
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    before = cache.tracked_count()
+    for i in range(3):
+        batch = spark.createDataFrame(
+            [(2 * i, base), (2 * i + 1, base + " today")],
+            "doc_id long, text string",
+        )
+        incremental_dedup_batch_body(
+            batch, i, str(tmp_path / "index"), str(tmp_path / "pairs")
+        )
+        assert cache.tracked_count() == before, i
+    assert spark.read.parquet(str(tmp_path / "pairs")).count() > 0

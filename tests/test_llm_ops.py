@@ -1188,6 +1188,30 @@ def test_cluster_maintenance_mismatched_state_dirs_raise(spark, tmp_path):
     assert not (tmp_path / "pairs" / "batch=1").exists()
 
 
+def test_cluster_maintenance_first_batch_equals_one_shot(spark, tmp_path):
+    """Fresh dirs: batch 0 folds its pairs into the empty Arrow-built
+    assignment, and gen=0 equals one-shot batch clustering of the same
+    documents."""
+    from oamap_spark.operators.clustering import connected_components_min_id
+    from oamap_spark.operators.dedup import minhash_lsh_pairs
+    from oamap_spark.streaming.pipelines import cluster_maintenance_batch_body
+
+    docs = _tiny_docs(spark, [1, 2, 3, 4, 5])
+    dirs = [str(tmp_path / x) for x in ("index", "pairs", "asg")]
+    cluster_maintenance_batch_body(docs, 0, *dirs)
+    got = spark.read.parquet(f"{dirs[2]}/gen=0")
+    assert got.schema.simpleString() == "struct<node:bigint,cluster_id:bigint>"
+    want = {
+        tuple(r)
+        for r in connected_components_min_id(
+            minhash_lsh_pairs(
+                docs, "doc_id", "text", k=16, rows_per_band=2, threshold=0.9
+            )
+        ).collect()
+    }
+    assert {tuple(r) for r in got.collect()} == want and want
+
+
 def test_stream_batch_bodies_log_what_they_read(spark, tmp_path, caplog):
     """Both batch bodies log which index batches and which assignment
     generation they read, from the listings they already take; the

@@ -933,3 +933,27 @@ def test_apply_components_update_broadcasts_relabel_map(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     hits = re.findall(r"^\(\d+\) BroadcastHashJoin", p, re.M)
     assert len(hits) == 1, p
+
+
+def test_apply_components_update_driver_finish_is_local_relation(
+    spark, tmp_path
+):
+    """On the driver-finish path the fold's relabel map and fresh-node
+    labels are Arrow-built local relations: the plan of
+    apply_components_update over parquet inputs holds LocalTableScan
+    and no RDD scan, so no micro-batch starts a Python worker to read
+    them. (tools/plan_census.py cannot see inside foreachBatch bodies,
+    so this plan is pinned here.)"""
+    from oamap_spark.operators import clustering as C
+
+    spark.createDataFrame(
+        [(1, 1), (2, 1), (10, 10), (11, 10)], "node long, cluster_id long"
+    ).write.parquet(str(tmp_path / "asg"))
+    spark.createDataFrame(
+        [(2, 50), (50, 10), (70, 71)], "id_a long, id_b long"
+    ).write.parquet(str(tmp_path / "pairs"))
+    asg = spark.read.parquet(str(tmp_path / "asg"))
+    pairs = spark.read.parquet(str(tmp_path / "pairs"))
+    p = audit.plan_string(C.apply_components_update(asg, pairs))
+    assert "LocalTableScan" in p, p
+    assert not re.search(r"ExistingRDD|Scan RDD|RDDScan", p), p

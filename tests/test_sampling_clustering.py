@@ -424,6 +424,53 @@ def test_apply_components_update_empty_batch_is_identity(spark):
     assert {(r["node"], r["cluster_id"]) for r in out.collect()} == {
         (r["node"], r["cluster_id"]) for r in asg.collect()
     }
+    # zero contracted edges: both driver-finish frames are empty and
+    # keep the input schemas' types (int ids here, where a Python list
+    # would infer long), and so does the unchanged assignment
+    pairs = spark.createDataFrame([], "id_a int, id_b int")
+    asg = spark.createDataFrame([(1, 1), (2, 1)], "node int, cluster_id int")
+    labels, comp_rep = C._contracted_fixpoint(pairs, asg, "id_a", "id_b")
+    assert labels.schema.simpleString() == (
+        "struct<node:int,cluster_id:int,__fresh:boolean>"
+    )
+    assert comp_rep.schema.simpleString() == "struct<node:int,cluster_id:int>"
+    assert labels.collect() == [] and comp_rep.collect() == []
+    out = C.apply_components_update(asg, pairs)
+    assert out.schema.simpleString() == "struct<node:int,cluster_id:int>"
+    assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1)]
+
+
+def test_apply_components_update_invariant_to_arrow_confs(spark):
+    # the driver-finish frames are built from Arrow tables: the fold
+    # must not depend on whether the session's pandas Arrow path is on
+    # or on how Arrow batches are sized (7 rows splits every table)
+    import random
+
+    rng = random.Random(3)
+    e1 = [(rng.randrange(30), 100 + rng.randrange(20)) for _ in range(20)]
+    e2 = [(100 + rng.randrange(20), 200 + rng.randrange(20)) for _ in range(20)]
+
+    def fold():
+        asg = C.connected_components_min_id(_edges(spark, e1))
+        for batch in (e1, e2):
+            asg = C.apply_components_update(asg, _edges(spark, batch))
+        return sorted(map(tuple, asg.collect()))
+
+    confs = {
+        "spark.sql.execution.arrow.pyspark.enabled": "false",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+    }
+    default = fold()
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        assert fold() == default
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert all(spark.conf.get(k) == v for k, v in prev.items())
+    assert default == sorted(_union_find_min_labels(e1 + e2).items())
 
 
 # ---- property: the maintenance fold vs a pure-Python union-find ----
