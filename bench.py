@@ -200,7 +200,7 @@ def microbenches(spark, sf_dir: str) -> tuple[list[Micro], dict[str, dict]]:
     # doc-in-doc pairs: ~10 shared df=2 tail shingles each, verified
     # containment 19/21 ≈ 0.905 — the two header→tail boundary
     # shingles differ). The SIGNAL is candidate pair-sid incidences
-    # Σ_sid C(df_kept, 2) — what the posting self-join actually
+    # Σ_sid C(df_kept, 2) — what the posting candidate join actually
     # shuffles: uncapped, each hot shingle alone contributes
     # 500·499/2 ≈ 125k incidences (quadratic in cluster size); capped
     # (df_cap=16, the production knob) drops the hot postings and
@@ -254,7 +254,7 @@ def microbenches(spark, sf_dir: str) -> tuple[list[Micro], dict[str, dict]]:
 
     def contain_signal(cap: int, label: str, rows: int) -> None:
         verified_pairs(label, rows)
-        # what the posting self-join shuffles under this cap
+        # what the posting candidate join shuffles under this cap
         signals["skew_contain_candidate_incidences"][label] = int(
             kept_post.where(F.col("df") <= cap)
             .select(F.sum(F.col("df") * (F.col("df") - 1) / 2).cast("long").alias("i"))

@@ -85,11 +85,6 @@ def shingles(text_col: Column | str, n: int = 3) -> Column:
     )
 
 
-def shingle_ids(text_col: Column | str, n: int = 3) -> Column:
-    """Array of distinct modular shingle ids (MinHash input)."""
-    return F.transform(shingles(text_col, n), token_id_mod_p)
-
-
 # DuckDB twins ({tk} = a token-list expression, usually a CTE column).
 SQL_SHINGLES = (
     "list_distinct(CASE WHEN len({tk}) >= 3 "
@@ -203,14 +198,6 @@ def sql_positional_window_ids(tids_sql: str, n: int = 8) -> str:
         f"range(1, len({tids_sql}) - {n - 2})] "
         f"ELSE [] END"
     )
-
-
-def stopword_ratio(text_col: Column | str, stopwords: tuple[str, ...]) -> Column:
-    """Fraction of tokens that are stopwords (quality / lang signal)."""
-    toks = tokens(text_col)
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return n_sw.cast("double") / F.size(toks)
 
 
 def fingerprint(text_col: Column | str) -> Column:

@@ -209,7 +209,7 @@ def shingle_ids_table(
 
 
 def flagged_shingle_ids_table(
-    df: DataFrame, id_col: str, text_col: str, new_col: str, n: int = 3
+    df: DataFrame, id_col: str, text_col: str, new_col: str | None = None, n: int = 3
 ) -> DataFrame:
     """(id, is_new, ids) — :func:`shingle_ids_table` with the arrival
     flag riding the narrow tokenize pass (no extra join or shuffle).
@@ -218,19 +218,25 @@ def flagged_shingle_ids_table(
     per detector — at 100 TB the (id, ids) half is the persisted
     signature index and only arrival rows are new work per batch.
 
-    A null flag fails loudly in-plan (the guard rides the is_new
-    expression, which the probe filter / pair-direction predicate
-    evaluate on every row): a silently-null flag would demote an
-    arrival to corpus status and quietly skip its dedup — the same
-    fail-loud convention as epoch_shuffle's key guards."""
+    ``new_col=None`` flags every row new with the literal true, which
+    the probes' filters fold: the batch detectors and the arrival half
+    of a steady or stream probe. A null ``new_col`` flag fails loudly
+    in-plan (the guard rides the is_new expression, which the probe
+    filter / pair-direction predicate evaluate on every row): a
+    silently-null flag would demote an arrival to corpus status and
+    quietly skip its dedup — the same fail-loud convention as
+    epoch_shuffle's key guards."""
     from oamap_spark.cache import track
 
-    is_new = F.when(
-        F.col(new_col).isNull(),
-        F.raise_error(
-            F.lit(f"incremental dedup: null {new_col} arrival flag")
-        ).cast("boolean"),
-    ).otherwise(F.col(new_col).cast("boolean"))
+    if new_col is None:
+        is_new = F.lit(True)
+    else:
+        is_new = F.when(
+            F.col(new_col).isNull(),
+            F.raise_error(
+                F.lit(f"incremental dedup: null {new_col} arrival flag")
+            ).cast("boolean"),
+        ).otherwise(F.col(new_col).cast("boolean"))
     return track(
         df.select(
             F.col(id_col).alias("id"),
@@ -255,9 +261,7 @@ def steady_ids_with_arrivals(
     probes' filters fold, so each half of the union prunes away
     wherever only one side is consumed; a consumer that reads no
     ``sig`` prunes the arrivals' minhashes away too."""
-    arr_ids = flagged_shingle_ids_table(
-        arrivals.withColumn("__nw", F.lit(True)), id_col, text_col, "__nw", n
-    )
+    arr_ids = flagged_shingle_ids_table(arrivals, id_col, text_col, n=n)
     return index_df.select(
         "id", F.lit(False).alias("is_new"), "ids", "sig"
     ).unionByName(signature_table(arr_ids))
@@ -268,8 +272,9 @@ def pair_once_from_probe() -> Column:
     generated exactly ONCE from the probe side: a (new, old) pair can
     only surface from its new member (any ordering allowed); a
     (new, new) pair would surface from both members, so only the
-    id_a < id_b direction is kept. Exactness matters beyond wasted
-    work where the pair row carries a count (containment's
+    id_a < id_b direction is kept. With every row new (the batch
+    detectors) it folds to ``x.id < y.id``. Exactness matters beyond
+    wasted work where the pair row carries a count (containment's
     shared_kept feeds the upper-bound prune; double counting would
     weaken the prune and re-admit the candidate mass it exists to
     drop). Expects the join to use aliases ``x`` (probe, new rows
@@ -338,6 +343,62 @@ def signature_table(ids_df: DataFrame) -> DataFrame:
     return ids_df.select("*", minhash_signature("ids", MINHASH_K).alias("sig"))
 
 
+def _minhash_probe_pairs(
+    ids_df: DataFrame,
+    k: int,
+    rows_per_band: int,
+    threshold: float,
+    bucket_cap: int | None = None,
+) -> DataFrame:
+    """The one MinHash band-candidate builder: arrival bands (``is_new``)
+    probe the full band table, and candidates are verified with exact
+    shingle Jaccard. ``ids_df`` is (id, is_new, ids[, sig]); rows
+    without a stored ``sig`` are hashed here. ``bucket_cap`` applies
+    the star fallback of :func:`minhash_lsh_pairs`, whose rows are all
+    new."""
+    if "sig" not in ids_df.columns:
+        ids_df = ids_df.select("*", minhash_signature("ids", k).alias("sig"))
+    elif k != MINHASH_K:
+        raise ValueError(
+            f"minhash pairs: ids_df carries a stored sig of "
+            f"MINHASH_K={MINHASH_K} minhashes, which k={k} cannot band"
+        )
+    bands = _explode_bands(
+        ids_df.select("id", "is_new", "sig"), k // rows_per_band, rows_per_band
+    )
+    star = None
+    if bucket_cap is not None:
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("band_idx", "band_key")
+        annot = bands.withColumn("cnt", F.count(F.lit(1)).over(w)).withColumn(
+            "bmin", F.min("id").over(w)
+        )
+        bands = annot.where(F.col("cnt") <= bucket_cap).drop("cnt", "bmin")
+        star = (
+            annot.where((F.col("cnt") > bucket_cap) & (F.col("id") != F.col("bmin")))
+            .select(F.col("bmin").alias("id_a"), F.col("id").alias("id_b"))
+        )
+    cand = (
+        bands.where(F.col("is_new"))
+        .select("id", "band_idx", "band_key")
+        .alias("x")
+        .join(
+            bands.alias("y"),
+            (F.col("x.band_idx") == F.col("y.band_idx"))
+            & (F.col("x.band_key") == F.col("y.band_key"))
+            & pair_once_from_probe(),
+        )
+        .select(
+            F.least(F.col("x.id"), F.col("y.id")).alias("id_a"),
+            F.greatest(F.col("x.id"), F.col("y.id")).alias("id_b"),
+        )
+    )
+    if star is not None:
+        cand = cand.unionByName(star)
+    return _jaccard_verify(cand.distinct(), ids_df, threshold)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -350,15 +411,12 @@ def minhash_lsh_pairs(
     ids_df: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs over n-token shingles, verified with
-    exact shingle Jaccard.
-
-    narrow: signature = k minhashes over distinct shingle ids
-    shuffle 1: explode bands → group candidates by (band_idx, band_key)
-    shuffle 2: join candidate ids back to shingle sets for verification
-    The verify join reads only the tokenize→shingle subtree (not the
-    k-hash minhash subtree), so signatures are computed exactly once
-    per doc per plan branch. Bands use string keys "sig_i ∘ sig_{i+1}"
-    (no modular-combine overflow, portable to SQL).
+    exact shingle Jaccard: the arrival probe of
+    :func:`minhash_lsh_pairs_incremental` with every row new, where
+    the pair-once predicate folds to ``x.id < y.id``. Bands use string
+    keys "sig_i ∘ sig_{i+1}" (no modular-combine overflow, portable to
+    SQL); the verify join reads only the shingle-id sets, not the
+    k-hash signature subtree.
 
     ``bucket_cap`` is the 100 TB skew guard: a band bucket larger than
     the cap (a boilerplate cluster — thousands of near-identical docs
@@ -375,11 +433,10 @@ def minhash_lsh_pairs(
     (MUST be built with the same ``n``) so multi-detector pipelines
     tokenize the corpus once instead of once per detector.
     """
-    n_bands = k // rows_per_band
     # One narrow, persisted shingle-id table feeds everything: the md5
     # pass runs once per token (token_id_array), shingle ids are pure
     # modular arithmetic (combine_shingle_ids), and the persist means
-    # the band self-join and both verify joins read cached arrays
+    # the band join and both verify joins read cached arrays
     # instead of re-tokenizing the corpus per plan branch (4 branches
     # → measured ~8× at sf0.1). At 100 TB the equivalent move is
     # materializing this signature table to storage once per corpus
@@ -392,39 +449,10 @@ def minhash_lsh_pairs(
     # into the k minhash expressions re-evaluates the hash subtree per
     # reference (measured 12–14× slower).
     if ids_df is None:
-        ids_df = shingle_ids_table(df, id_col, text_col, n)
-    sig_df = ids_df.select("id", minhash_signature("ids", k).alias("sig"))
-
-    bands = _explode_bands(sig_df, n_bands, rows_per_band)
-
-    if bucket_cap is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band_idx", "band_key")
-        annot = bands.withColumn("cnt", F.count(F.lit(1)).over(w)).withColumn(
-            "bmin", F.min("id").over(w)
-        )
-        bands = annot.where(F.col("cnt") <= bucket_cap).drop("cnt", "bmin")
-        star = (
-            annot.where((F.col("cnt") > bucket_cap) & (F.col("id") != F.col("bmin")))
-            .select(F.col("bmin").alias("id_a"), F.col("id").alias("id_b"))
-        )
+        ids_df = flagged_shingle_ids_table(df, id_col, text_col, n=n)
     else:
-        star = None
-
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-    )
-    if star is not None:
-        cand = cand.unionByName(star)
-    return _jaccard_verify(cand.distinct(), ids_df, threshold)
+        ids_df = ids_df.withColumn("is_new", F.lit(True))
+    return _minhash_probe_pairs(ids_df, k, rows_per_band, threshold, bucket_cap)
 
 
 def minhash_lsh_pairs_incremental(
@@ -455,11 +483,12 @@ def minhash_lsh_pairs_incremental(
     no extra join or shuffle versus the batch form.
 
     Output pairs are normalized (id_a < id_b) and verified with exact
-    shingle Jaccard, identical to :func:`minhash_lsh_pairs`: the
-    result equals the batch pair list filtered to pairs touching an
-    arrival (restriction commutes with banding — a pair's band
-    collision does not depend on which pipeline found it), which is
-    exactly what the SQL oracle replays.
+    shingle Jaccard by the same candidate builder as
+    :func:`minhash_lsh_pairs` (which flags every row new): the result
+    equals the batch pair list filtered to pairs touching an arrival
+    (restriction commutes with banding — a pair's band collision does
+    not depend on which pipeline found it), which is exactly what the
+    SQL oracle replays.
 
     Boilerplate-cluster skew: an over-sized band bucket costs m·s
     here — linear in corpus bucket size, not quadratic. If the
@@ -485,7 +514,6 @@ def minhash_lsh_pairs_incremental(
     ``sig``, every row is hashed here. Signatures are deterministic
     per document, so the pair output is identical either way.
     """
-    n_bands = k // rows_per_band
     if df is None and ids_df is None:
         raise ValueError(
             "minhash_lsh_pairs_incremental: df=None is the steady-state "
@@ -494,33 +522,7 @@ def minhash_lsh_pairs_incremental(
         )
     if ids_df is None:
         ids_df = flagged_shingle_ids_table(df, id_col, text_col, new_col, n)
-    if "sig" not in ids_df.columns:
-        ids_df = ids_df.select("*", minhash_signature("ids", k).alias("sig"))
-    elif k != MINHASH_K:
-        raise ValueError(
-            f"minhash_lsh_pairs_incremental: ids_df carries a stored sig of "
-            f"MINHASH_K={MINHASH_K} minhashes, which k={k} cannot band"
-        )
-    bands = _explode_bands(
-        ids_df.select("id", "is_new", "sig"), n_bands, rows_per_band
-    )
-    cand = (
-        bands.where(F.col("is_new"))
-        .select("id", "band_idx", "band_key")
-        .alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & pair_once_from_probe(),
-        )
-        .select(
-            F.least(F.col("x.id"), F.col("y.id")).alias("id_a"),
-            F.greatest(F.col("x.id"), F.col("y.id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    return _jaccard_verify(cand, ids_df, threshold)
+    return _minhash_probe_pairs(ids_df, k, rows_per_band, threshold)
 
 
 def ngram_window_overlap(
@@ -766,20 +768,18 @@ def containment_pairs(
     fires) but C ≈ 1.0.
 
     Candidates come from a DF-capped inverted index instead of minhash
-    bands (bands estimate Jaccard, the wrong similarity here):
-
-    narrow:    shingle-id sets per doc (shared md5 token machinery)
-    shuffle 1: posting list (sid, id) — ids only, never text
-    shuffle 2: document frequency per sid; postings with df > df_cap
-               are DROPPED — the 100 TB skew guard. A boilerplate
-               shingle shared by millions of docs would otherwise
-               contribute df² candidate pairs on one key; dropping it
-               loses only pairs whose ENTIRE overlap is boilerplate —
-               exactly the pairs containment dedup exists to ignore.
-    shuffle 3: posting self-join on kept sids (pair volume bounded by
-               df_cap · |postings|) → distinct candidate ids
-    verify:    exact containment over the cached shingle sets, only on
-               candidates.
+    bands (bands estimate Jaccard, the wrong similarity here). The
+    batch form is the arrival probe of
+    :func:`containment_pairs_incremental` with every row new, where
+    the pair-once predicate folds to ``x.id < y.id``. Postings (sid,
+    id) carry ids only, never text; postings on shingles with document
+    frequency above ``df_cap`` are DROPPED — the 100 TB skew guard. A
+    boilerplate shingle shared by millions of docs would otherwise
+    contribute df² candidate pairs on one key; dropping it loses only
+    pairs whose ENTIRE overlap is boilerplate — exactly the pairs
+    containment dedup exists to ignore. Candidate volume is bounded
+    by df_cap · |postings|, and the exact verify runs only on
+    candidates that survive the upper-bound prune.
 
     Recall caveat (documented, deliberate): a true containment pair
     sharing ONLY df-capped shingles is missed. Completeness within the
@@ -790,68 +790,35 @@ def containment_pairs(
     ``ids_df``: optionally pass a precomputed :func:`shingle_ids_table`
     (MUST be built with the same ``n``) so multi-detector pipelines
     tokenize the corpus once instead of once per detector."""
-    from oamap_spark.cache import track
-
     if ids_df is None:
-        ids_df = shingle_ids_table(df, id_col, text_col, n)
-    post = ids_df.select("id", F.explode("ids").alias("sid"))
-    dfreq = post.groupBy("sid").agg(F.count(F.lit(1)).alias("df"))
-    # THREE consumers re-evaluate this subtree (both sides of the
-    # candidate self-join and the kc aggregation in the prune tail) —
-    # without the persist the explode + df aggregation + cap join run
-    # three times per query (r11, guide §1.4/§2; caller owns the
-    # lifetime via cache.track like the signature tables)
-    kept = track(
-        post.join(dfreq.where(F.col("df") <= df_cap).select("sid"), "sid")
+        ids_df = flagged_shingle_ids_table(df, id_col, text_col, n=n)
+    else:
+        ids_df = ids_df.withColumn("is_new", F.lit(True))
+    return containment_pairs_incremental(
+        None, id_col, text_col, "is_new", n, threshold, df_cap, ids_df
     )
-    cand = (
-        kept.alias("x")
-        .join(
-            kept.alias("y"),
-            (F.col("x.sid") == F.col("y.sid")) & (F.col("x.id") < F.col("y.id")),
-        )
-        .groupBy(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("shared_kept"))
-    )
-    return _containment_prune_verify(cand, ids_df, kept, threshold)
 
 
 def _containment_prune_verify(
-    cand: DataFrame, ids_df: DataFrame, kept: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared tail of the containment builders: integer upper-bound
-    prune, then exact array verify on survivors only.
-
-    Upper-bound prune BEFORE the array verify (zero recall loss):
-    containment = (shared_kept + shared_capped) / min(|A|, |B|) and
-    shared_capped ≤ min(capped_A, capped_B), so any pair whose BOUND
-    (shared_kept + min(capped)) / min(size) is below the threshold
-    can be dropped on integer columns alone — the candidate
-    self-join's groupBy count gives shared_kept for free, and the
-    wide shingle arrays only ship for survivors. On a small-vocab
-    corpus where docs share shingles by chance this prunes ~all of
-    the candidate mass (sf0.1: 1.16M pair-sid incidences → a handful
-    of verified pairs); on a real heavy-tailed corpus it is the same
-    prune prefix-filter joins use."""
-    stats = ids_df.select("id", F.size("ids").alias("sz")).join(
-        kept.groupBy("id").agg(F.count(F.lit(1)).alias("kc")), "id", "left"
-    ).select(
-        "id", "sz", (F.col("sz") - F.coalesce("kc", F.lit(0))).alias("capped")
-    )
-    return _containment_prune_verify_stats(
-        cand, stats, ids_df.select("id", "ids"), threshold
-    )
-
-
-def _containment_prune_verify_stats(
     cand: DataFrame, stats: DataFrame, sets_df: DataFrame, threshold: float
 ) -> DataFrame:
-    """The prune + exact-verify tail over PRECOMPUTED per-doc stats
-    (id, sz, capped) — split out of :func:`_containment_prune_verify`
-    so the steady-state form (r12) can feed stats derived from its
-    persisted corpus tables instead of re-aggregating the full kept
-    posting set per batch. ``sets_df`` carries (id, ids) for the exact
-    array verify of prune survivors."""
+    """The containment tail over per-doc stats (id, sz, capped):
+    integer upper-bound prune, then exact array verify on survivors
+    only. ``sets_df`` carries (id, ids) for that verify.
+
+    The prune loses no recall: containment = (shared_kept +
+    shared_capped) / min(|A|, |B|) and shared_capped ≤ min(capped_A,
+    capped_B), so any pair whose BOUND (shared_kept + min(capped)) /
+    min(size) is below the threshold can be dropped on integer
+    columns alone — the candidate join's groupBy count gives
+    shared_kept for free, and the wide shingle arrays only ship for
+    survivors. On a small-vocab corpus where docs share shingles by
+    chance this prunes ~all of the candidate mass (sf0.1: 1.16M
+    pair-sid incidences → a handful of verified pairs); on a real
+    heavy-tailed corpus it is the same prune prefix-filter joins use.
+    :func:`containment_pairs_incremental` derives the stats from its
+    kept postings; the steady-state form from its persisted corpus
+    tables."""
     bound = (
         F.col("shared_kept") + F.least("capped_a", "capped_b")
     ).cast("double") / F.least("sz_a", "sz_b")
@@ -914,10 +881,10 @@ def containment_pairs_incremental(
     (new, new) pair would surface from BOTH sides, so the probe keeps
     only the id_a < id_b direction — this keeps ``shared_kept`` an
     exact per-pair count (double-counting would inflate the
-    upper-bound prune, not just waste work). Prune + verify are the
-    shared batch tail, so the output equals the batch pair list
-    restricted to arrival-touching pairs — what the SQL oracle
-    replays.
+    upper-bound prune, not just waste work). :func:`containment_pairs`
+    is this probe with every row new, so the output equals the batch
+    pair list restricted to arrival-touching pairs — what the SQL
+    oracle replays.
 
     ``ids_df``: optionally pass a precomputed
     :func:`flagged_shingle_ids_table` (same ``n``), shared with
@@ -935,8 +902,11 @@ def containment_pairs_incremental(
         ids_df = flagged_shingle_ids_table(df, id_col, text_col, new_col, n)
     post = ids_df.select("id", "is_new", F.explode("ids").alias("sid"))
     dfreq = post.groupBy("sid").agg(F.count(F.lit(1)).alias("df"))
-    # persist: probe, build and the prune tail's kc aggregation all
-    # re-evaluate this subtree otherwise (see containment_pairs)
+    # THREE consumers re-evaluate this subtree otherwise (the probe,
+    # the build side and the kc aggregation of the prune stats): the
+    # persist runs the explode + df aggregation + cap join once
+    # (caller owns the lifetime via cache.track, like the shingle
+    # tables)
     kept = track(
         post.join(dfreq.where(F.col("df") <= df_cap).select("sid"), "sid")
     )
@@ -954,8 +924,13 @@ def containment_pairs_incremental(
         )
         .agg(F.count(F.lit(1)).alias("shared_kept"))
     )
+    stats = ids_df.select("id", F.size("ids").alias("sz")).join(
+        kept.groupBy("id").agg(F.count(F.lit(1)).alias("kc")), "id", "left"
+    ).select(
+        "id", "sz", (F.col("sz") - F.coalesce("kc", F.lit(0))).alias("capped")
+    )
     return _containment_prune_verify(
-        cand, ids_df.select("id", "ids"), kept.select("id", "sid"), threshold
+        cand, stats, ids_df.select("id", "ids"), threshold
     )
 
 
@@ -1126,4 +1101,4 @@ def containment_pairs_incremental_steady(
     sets_df = corpus_sets.select("id", "ids").unionByName(
         arr_ids.select("id", "ids")
     )
-    return _containment_prune_verify_stats(cand, stats, sets_df, threshold)
+    return _containment_prune_verify(cand, stats, sets_df, threshold)

@@ -967,7 +967,7 @@ def _steady_minhash_pairs(
     arrivals' shingle ids and signatures unioned under the persisted
     corpus index, whose stored ``sig`` bands the corpus half."""
     return D.minhash_lsh_pairs_incremental(
-        None, "doc_id", "text", "__nw",
+        None, "doc_id", "text", "is_new",
         ids_df=D.steady_ids_with_arrivals(
             arrivals, _steady_corpus_index(spark, sf_dir)
         ),

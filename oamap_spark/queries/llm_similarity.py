@@ -755,7 +755,7 @@ def dedup_embedding_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     band with p ≈ 0.69, on ≥1 of 2 bands with p ≈ 0.90, and misses
     all 8 tables with p ≈ 6.6e-9 — recall-complete at verification SF
     (the exact all-pairs oracle asserts it). Shuffle discipline as in
-    dedup_minhash_lsh: the band self-join carries (band key, vec_id)
+    dedup_minhash_lsh: the band join carries (band key, vec_id)
     ONLY; vectors are re-joined by id after the candidate-pair
     distinct, so the wide embedding column never rides the candidate
     shuffle. 256-value bands keep buckets at ~n/256 rows; at 100 TB

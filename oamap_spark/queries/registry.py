@@ -15,7 +15,7 @@ engines' (identical to ~1e-9 relative) floating-point sums hash equal.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,7 +30,6 @@ class QuerySpec:
     tags: tuple[str, ...] = ()
     doc: str = ""
     bench: bool = False  # include in bench.py headline set
-    extra: dict = field(default_factory=dict)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -72,12 +71,8 @@ def _wrap(fn: QueryFn) -> QueryFn:
         return fn(spark, sf_dir)
 
     wrapped.__doc__ = fn.__doc__
-    wrapped.__name__ = getattr(fn, "__name__", name_of(fn))
+    wrapped.__name__ = getattr(fn, "__name__", "query")
     return wrapped
-
-
-def name_of(fn) -> str:
-    return getattr(fn, "__name__", "query")
 
 
 def all_specs() -> dict[str, QuerySpec]:

@@ -29,9 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from oamap_spark.session import positive_int_env
-
 _log = logging.getLogger(__name__)
+
+
+# shuffle partitions of every stateful stream and its foreachBatch jobs
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
 @contextlib.contextmanager
@@ -47,18 +49,15 @@ def stream_shuffle_partitions(spark: SparkSession):
     per-batch overhead (measured at sf0.1: stream_stateful_user_counts
     15.0 s at 32 partitions → 2.8 s at 8). These pipelines create a
     fresh checkpoint per run, so the count is free to choose here; a
-    production deployment sizes it to stateful-key volume via
-    $SPARK_GRAFT_STREAM_SHUFFLE (state layout is fixed for the life of
-    a checkpoint, so pick for the target scale, not the first day).
+    production deployment sizes :data:`STREAM_SHUFFLE_PARTITIONS` to
+    stateful-key volume (state layout is fixed for the life of a
+    checkpoint, so pick for the target scale, not the first day).
     Batch jobs inside foreachBatch bodies inherit the same setting
     while the stream runs; AQE still coalesces those by size. The
     session value is restored on exit — the driver owns the session.
-    A value that is not a positive integer raises ``ValueError`` before
-    the session is touched.
     """
-    n = positive_int_env("SPARK_GRAFT_STREAM_SHUFFLE", "8", "stream shuffle partitions")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
         yield
     finally:
@@ -390,9 +389,7 @@ def incremental_dedup_batch_body(
     )
 
     bspark = batch.sparkSession
-    ids = flagged_shingle_ids_table(
-        batch.withColumn("__nw", F.lit(True)), "doc_id", "text", "__nw", 3
-    )
+    ids = flagged_shingle_ids_table(batch, "doc_id", "text", n=3)
     # ONE tracked arrival frame, signatures included: the probe's
     # arrival half and the index write both read it, so arrivals are
     # tokenized and minhashed once per micro-batch. The shingle
@@ -422,7 +419,7 @@ def incremental_dedup_batch_body(
             .unionByName(arr)
         )
     pairs = minhash_lsh_pairs_incremental(
-        None, "doc_id", "text", "__nw", ids_df=ids_df
+        None, "doc_id", "text", "is_new", ids_df=ids_df
     )
     # pairs BEFORE the index write: the pair plan reads the index dir
     # and must not see this batch's own rows on the corpus side

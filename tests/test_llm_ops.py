@@ -863,6 +863,27 @@ def test_incremental_null_flag_fails_loudly(spark):
         _banded_neardup_pairs(emb, new_col="nw").collect()
 
 
+def test_flagged_ids_without_flag_column_marks_every_row_new(spark):
+    """``new_col=None`` is how the batch detectors and the arrival half
+    of a steady or stream probe enter the one probe: every row is new,
+    the flag is the literal true, and no null guard rides the plan."""
+    from oamap_spark import cache
+    from oamap_spark.operators.dedup import flagged_shingle_ids_table
+    from oamap_spark.plans.audit import plan_string
+
+    docs = spark.createDataFrame(
+        [(1, "some text here", True), (2, "other text there", False)],
+        "doc_id long, text string, nw boolean",
+    )
+    every = flagged_shingle_ids_table(docs, "doc_id", "text")
+    flagged = flagged_shingle_ids_table(docs, "doc_id", "text", "nw")
+    assert every.columns == flagged.columns == ["id", "is_new", "ids"]
+    assert [r["is_new"] for r in every.orderBy("id").collect()] == [True, True]
+    assert "raise_error" not in plan_string(every, "extended")
+    assert "raise_error" in plan_string(flagged, "extended")
+    cache.sweep()
+
+
 def test_embedding_incremental_skips_arrival_free_buckets_unbuffered():
     """The streamed body must skip an arrival-free bucket from its
     FIRST row (rows arrive arrivals-first) without touching its

@@ -174,13 +174,12 @@ def test_snippet_steady_cluster_merge(spark, tmp_path):
         corpus, "doc_id", "text", threshold=0.8).select("id_a", "id_b")
     connected_components_min_id(edges).write.parquet(asg_path)
     # ... next day ...
-    arr = flagged_shingle_ids_table(
-        batch.withColumn("nw", F.lit(True)), "doc_id", "text", "nw")
+    arr = flagged_shingle_ids_table(batch, "doc_id", "text")  # every row new
     ids = (spark.read.parquet(idx_path)
            .select("id", F.lit(False).alias("is_new"), "ids")
            .unionByName(arr))
     mh = minhash_lsh_pairs_incremental(
-        None, "doc_id", "text", "nw", threshold=0.8, ids_df=ids)
+        None, "doc_id", "text", "is_new", threshold=0.8, ids_df=ids)
     merged = incremental_components_min_id(
         mh.select("id_a", "id_b"), spark.read.parquet(asg_path))
     # bit-identical to rerunning batch CC over the whole corpus,
@@ -341,18 +340,18 @@ def test_snippet_steady_state_shared_index(spark, tmp_path):
     batch = docs.where(src_num >= 10)
     idx_path = str(tmp_path / "shingle_idx")
     shingle_ids_table(corpus, "doc_id", "text").write.parquet(idx_path)
-    arr = flagged_shingle_ids_table(
-        batch.withColumn("nw", F.lit(True)), "doc_id", "text", "nw"
-    )
+    arr = flagged_shingle_ids_table(batch, "doc_id", "text")  # every row new
     ids = (
         spark.read.parquet(idx_path)
         .select("id", F.lit(False).alias("is_new"), "ids")
         .unionByName(arr)
     )
     mh = minhash_lsh_pairs_incremental(
-        None, "doc_id", "text", "nw", threshold=0.8, ids_df=ids
+        None, "doc_id", "text", "is_new", threshold=0.8, ids_df=ids
     )
-    ct = containment_pairs_incremental(None, "doc_id", "text", "nw", ids_df=ids)
+    ct = containment_pairs_incremental(
+        None, "doc_id", "text", "is_new", ids_df=ids
+    )
     # the persisted-index probe must give the same answers as the
     # cold-start run that re-derives everything from text
     flagged = docs.withColumn("is_new", src_num >= 10)

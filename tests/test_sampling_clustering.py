@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from oamap_spark.operators import clustering as C
 from oamap_spark.operators import sampling as S
@@ -274,8 +275,19 @@ def test_greedy_pack_slots_enforces_preconditions(spark):
         greedy_pack_slots(nul_id, "doc_id", "n_tok", capacity=100).collect()
 
 
+_EDGE_SCHEMA = StructType(
+    [StructField("id_a", LongType()), StructField("id_b", LongType())]
+)
+_ASG_SCHEMA = StructType(
+    [StructField("node", LongType()), StructField("cluster_id", LongType())]
+)
+
+
 def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, "id_a: long, id_b: long")
+    # a local relation: no pickled RDD, no Python worker per read
+    return C.local_frame(
+        spark, _EDGE_SCHEMA, [[a for a, _ in pairs], [b for _, b in pairs]]
+    )
 
 
 def test_incremental_components_bridge_merges_old_clusters(spark):
@@ -534,16 +546,15 @@ def test_apply_components_update_matches_union_find(
             batches[k].append((min(a, b), max(a, b)))
     all_edges = [e for b in batches for e in b]
 
-    asg = _edges(spark, []).select(
-        F.col("id_a").alias("node"), F.col("id_b").alias("cluster_id")
-    )
+    asg = C.local_frame(spark, _ASG_SCHEMA, [[], []])
     for b in batches:
         # materialize between folds, as the maintenance loop's parquet
         # write-back does — each fold starts from persisted rows
         folded = C.apply_components_update(asg, _edges(spark, b)).collect()
-        asg = spark.createDataFrame(
-            [(r["node"], r["cluster_id"]) for r in folded],
-            "node: long, cluster_id: long",
+        asg = C.local_frame(
+            spark,
+            _ASG_SCHEMA,
+            [[r["node"] for r in folded], [r["cluster_id"] for r in folded]],
         )
     got = {(r["node"], r["cluster_id"]) for r in asg.collect()}
     assert got == set(_union_find_min_labels(all_edges).items())

@@ -352,23 +352,9 @@ def test_stream_stream_join_state_stays_bounded(spark, tmp_path):
     )
 
 
-@pytest.mark.parametrize("bad", ["abc", "0", "-3", "2.5", ""])
-def test_stream_shuffle_partitions_rejects_non_positive_int(
-    spark, monkeypatch, bad
-):
-    """$SPARK_GRAFT_STREAM_SHUFFLE fails fast with a clear error when
-    it is not a positive integer, and leaves the session untouched."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", bad)
-    with pytest.raises(ValueError, match="positive integer"):
-        with P.stream_shuffle_partitions(spark):
-            pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 def test_stream_shuffle_partitions_sets_and_restores(spark, monkeypatch):
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
+    monkeypatch.setattr(P, "STREAM_SHUFFLE_PARTITIONS", 3)
     with P.stream_shuffle_partitions(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
     assert spark.conf.get("spark.sql.shuffle.partitions") == before

@@ -122,7 +122,7 @@ def main() -> None:
         )
         new_pairs = cache.track(
             D.minhash_lsh_pairs_incremental(
-                None, "doc_id", "text", "__nw",
+                None, "doc_id", "text", "is_new",
                 k=K, rows_per_band=RPB, threshold=THR, ids_df=ids_df,
             ).select("id_a", "id_b")
         )

@@ -7,8 +7,8 @@ index build; the 455 s all-pairs-edge clustering queries). Run on a
 quiet machine.
 
 Round-end ritual (r11+): exits NONZERO if any query NOT tagged
-``sf_bounded_oracle_twin`` exceeds the ceiling (default 30 s,
-override $SPARK_GRAFT_CENSUS_CEILING) or errors. The twin tag marks
+``sf_bounded_oracle_twin`` exceeds the ceiling (the constant
+``CEILING_S``, 30 s) or errors. The twin tag marks
 deliberate sf-bounded ground-truth arms (exact all-pairs Jaccard /
 cosine, recursive-CTE closures) that are quadratic BY DESIGN and
 guarded against production sizes — they are reported but exempt.
@@ -22,7 +22,7 @@ import oamap_spark.queries as Q
 from oamap_spark.queries.registry import all_specs
 from oamap_spark import cache
 
-CEILING_S = float(os.environ.get("SPARK_GRAFT_CENSUS_CEILING", "30"))
+CEILING_S = 30.0
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 spark = get_spark()
