@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from oamap_spark.cache import track
 from oamap_spark.functions.text import (
     combine_shingle_ids,
     minhash_signature,
@@ -117,8 +118,6 @@ def all_pairs_jaccard(
     adversarial corpora (all docs identical) still verify
     quadratically — this is a verification artifact, not a scale
     path."""
-    from oamap_spark.cache import track
-
     # The prefix-filter lemma needs t ∈ (0, 1]: at t = 0 every pair
     # qualifies including shingle-DISJOINT ones, which no equi-join on
     # a shared token can emit (and "all pairs of the corpus" needs no
@@ -193,19 +192,18 @@ def shingle_ids_table(
 ) -> DataFrame:
     """The shared narrow (id, shingle-ids) table every shingle-based
     dedup detector starts from — tokenize (one md5 per token), combine
-    into n-shingle ids, persist via cache.track (caller-owned
-    lifetime). Build it ONCE per corpus snapshot and pass it to
+    into n-shingle ids. Build it ONCE per corpus snapshot and pass it to
     ``minhash_lsh_pairs`` / ``containment_pairs`` via ``ids_df`` when
     running several detectors over the same corpus (the all-signals
     composition) — otherwise each detector re-scans and re-tokenizes
-    the corpus and caches its own identical copy. At 100 TB the
-    equivalent move is materializing this table to storage once."""
-    from oamap_spark.cache import track
-
-    return track(
-        df.select(F.col(id_col).alias("id"), token_id_array(text_col).alias("tids"))
-        .select("id", combine_shingle_ids("tids", n).alias("ids"))
-    )
+    the corpus. The frame is NOT persisted: a caller that reads it more
+    than once wraps the call in ``cache.track`` (and owns that
+    lifetime); a single reader (a write to the persisted index) pays
+    no cache fill. At 100 TB the equivalent move is materializing this
+    table to storage once."""
+    return df.select(
+        F.col(id_col).alias("id"), token_id_array(text_col).alias("tids")
+    ).select("id", combine_shingle_ids("tids", n).alias("ids"))
 
 
 def flagged_shingle_ids_table(
@@ -220,14 +218,13 @@ def flagged_shingle_ids_table(
 
     ``new_col=None`` flags every row new with the literal true, which
     the probes' filters fold: the batch detectors and the arrival half
-    of a steady or stream probe. A null ``new_col`` flag fails loudly
+    of a steady probe. A null ``new_col`` flag fails loudly
     in-plan (the guard rides the is_new expression, which the probe
     filter / pair-direction predicate evaluate on every row): a
     silently-null flag would demote an arrival to corpus status and
     quietly skip its dedup — the same fail-loud convention as
-    epoch_shuffle's key guards."""
-    from oamap_spark.cache import track
-
+    epoch_shuffle's key guards. Untracked, like
+    :func:`shingle_ids_table`."""
     if new_col is None:
         is_new = F.lit(True)
     else:
@@ -237,13 +234,11 @@ def flagged_shingle_ids_table(
                 F.lit(f"incremental dedup: null {new_col} arrival flag")
             ).cast("boolean"),
         ).otherwise(F.col(new_col).cast("boolean"))
-    return track(
-        df.select(
-            F.col(id_col).alias("id"),
-            is_new.alias("is_new"),
-            token_id_array(text_col).alias("tids"),
-        ).select("id", "is_new", combine_shingle_ids("tids", n).alias("ids"))
-    )
+    return df.select(
+        F.col(id_col).alias("id"),
+        is_new.alias("is_new"),
+        token_id_array(text_col).alias("tids"),
+    ).select("id", "is_new", combine_shingle_ids("tids", n).alias("ids"))
 
 
 def steady_ids_with_arrivals(
@@ -260,8 +255,10 @@ def steady_ids_with_arrivals(
     ``is_new=False`` here). The is_new flags are literals, which the
     probes' filters fold, so each half of the union prunes away
     wherever only one side is consumed; a consumer that reads no
-    ``sig`` prunes the arrivals' minhashes away too."""
-    arr_ids = flagged_shingle_ids_table(arrivals, id_col, text_col, n=n)
+    ``sig`` prunes the arrivals' minhashes away too. The arrivals'
+    shingle table is tracked: the probe's band and verify branches
+    both read it (caller owns the lifetime)."""
+    arr_ids = track(flagged_shingle_ids_table(arrivals, id_col, text_col, n=n))
     return index_df.select(
         "id", F.lit(False).alias("is_new"), "ids", "sig"
     ).unionByName(signature_table(arr_ids))
@@ -449,7 +446,7 @@ def minhash_lsh_pairs(
     # into the k minhash expressions re-evaluates the hash subtree per
     # reference (measured 12–14× slower).
     if ids_df is None:
-        ids_df = flagged_shingle_ids_table(df, id_col, text_col, n=n)
+        ids_df = track(flagged_shingle_ids_table(df, id_col, text_col, n=n))
     else:
         ids_df = ids_df.withColumn("is_new", F.lit(True))
     return _minhash_probe_pairs(ids_df, k, rows_per_band, threshold, bucket_cap)
@@ -521,7 +518,7 @@ def minhash_lsh_pairs_incremental(
             "the arrival rows)"
         )
     if ids_df is None:
-        ids_df = flagged_shingle_ids_table(df, id_col, text_col, new_col, n)
+        ids_df = track(flagged_shingle_ids_table(df, id_col, text_col, new_col, n))
     return _minhash_probe_pairs(ids_df, k, rows_per_band, threshold)
 
 
@@ -544,8 +541,6 @@ def ngram_window_overlap(
 
     Output: one row per document that has at least one window —
     (id, n_windows, n_dup_windows, dup_ratio)."""
-    from oamap_spark.cache import track
-
     # One narrow, PERSISTED window-id table feeds both consumers (the
     # explode below and the final n_windows join) — unpersisted, the
     # md5 tokenize pass would run once per plan branch. Caller owns
@@ -681,8 +676,6 @@ def duplicated_span_removal(
     but the per-probe-doc rebuild."""
     from pyspark.sql import Window
 
-    from oamap_spark.cache import track
-
     # toks/T branch carries NO md5 work; the (id, pos, wid) window
     # table is built in its own tokenize pass and persisted, so the
     # per-token md5 runs ONCE even though three consumers (shared set,
@@ -791,7 +784,7 @@ def containment_pairs(
     (MUST be built with the same ``n``) so multi-detector pipelines
     tokenize the corpus once instead of once per detector."""
     if ids_df is None:
-        ids_df = flagged_shingle_ids_table(df, id_col, text_col, n=n)
+        ids_df = track(flagged_shingle_ids_table(df, id_col, text_col, n=n))
     else:
         ids_df = ids_df.withColumn("is_new", F.lit(True))
     return containment_pairs_incremental(
@@ -896,10 +889,8 @@ def containment_pairs_incremental(
             "form and requires ids_df (the persisted index unioned with "
             "the arrival rows)"
         )
-    from oamap_spark.cache import track
-
     if ids_df is None:
-        ids_df = flagged_shingle_ids_table(df, id_col, text_col, new_col, n)
+        ids_df = track(flagged_shingle_ids_table(df, id_col, text_col, new_col, n))
     post = ids_df.select("id", "is_new", F.explode("ids").alias("sid"))
     dfreq = post.groupBy("sid").agg(F.count(F.lit(1)).alias("df"))
     # THREE consumers re-evaluate this subtree otherwise (the probe,
@@ -1006,8 +997,6 @@ def containment_pairs_incremental_steady(
     The corpus tables come from :func:`containment_corpus_tables`, which
     MUST have been given this same ``df_cap``.
     """
-    from oamap_spark.cache import track
-
     arr_post = arr_ids.select("id", F.explode("ids").alias("sid"))
     arr_dfreq = arr_post.groupBy("sid").agg(F.count(F.lit(1)).alias("adf"))
     # df ⊕ on arrival-touched sids that EXIST in the corpus: one

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oamap_spark.cache import release
+from oamap_spark.cache import track
 from oamap_spark.functions import text as X
 from oamap_spark.operators import dedup as D
 from oamap_spark.queries.registry import register
@@ -295,8 +295,6 @@ def dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cache lifetime is caller-owned (the result is lazy, so an
     # unpersist here would defeat the reuse); long-lived sessions
     # reclaim via oamap_spark.cache.sweep() — bench.py does.
-    from oamap_spark.cache import track
-
     sh = track(
         d.select("doc_id", X.token_ids("text").alias("ids"))
         .select("doc_id", X.simhash32(F.col("ids")).alias("h"))
@@ -731,8 +729,6 @@ def dedup_ngram_overlap_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _steady_span_index(spark, sf_dir)
     _, arrivals = steady_split(load_table(spark, sf_dir, "documents"))
     aw = D.positional_window_table(arrivals, "doc_id", "text", 8)
-    from oamap_spark.cache import track
-
     # two consumers below (corpus probe + per-doc counts): persist so
     # arrivals tokenize once. Caller owns lifetime (cache.track).
     aw = track(aw)
@@ -948,14 +944,12 @@ def _steady_corpus_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature index, shared by every lexical steady probe."""
 
     def build() -> DataFrame:
-        ids = D.shingle_ids_table(
-            steady_split(load_table(spark, sf_dir, "documents"))[0],
-            "doc_id", "text", 3,
+        return D.signature_table(
+            D.shingle_ids_table(
+                steady_split(load_table(spark, sf_dir, "documents"))[0],
+                "doc_id", "text", 3,
+            )
         )
-        # the staged write is its one reader: drop the tracked cache
-        # before anything fills it
-        release(ids)
-        return D.signature_table(ids)
 
     return staged_once(spark, sf_dir, "idx", build)
 
@@ -1096,7 +1090,7 @@ def dedup_containment_incremental_steady(
         for i, name in enumerate(("cpost", "cdf", "cstats"))
     )
     _, arrivals = steady_split(load_table(spark, sf_dir, "documents"))
-    arr_ids = D.shingle_ids_table(arrivals, "doc_id", "text", 3)
+    arr_ids = track(D.shingle_ids_table(arrivals, "doc_id", "text", 3))
     return D.containment_pairs_incremental_steady(
         arr_ids,
         corpus_post=post,

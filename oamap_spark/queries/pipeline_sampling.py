@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from oamap_spark.cache import track
 from oamap_spark.operators import clustering as C
 from oamap_spark.operators import dedup as D
 from oamap_spark.operators import sampling as S
@@ -348,7 +349,7 @@ def _all_signal_pairs(d, e):
     shingle table). Shared by `dedup_clusters_all_signals` and
     `dedup_cluster_representatives` so the edge definition cannot
     drift between the census and the manifest."""
-    sids = D.shingle_ids_table(d, "doc_id", "text", n=3)
+    sids = track(D.shingle_ids_table(d, "doc_id", "text", n=3))
     mh = D.minhash_lsh_pairs(
         d, "doc_id", "text", k=16, rows_per_band=2, threshold=0.9, ids_df=sids
     ).select("id_a", "id_b")
@@ -654,8 +655,6 @@ def dedup_clusters_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph never recomputed; per batch the full-index work is the one
     streamed band probe; the contraction join and the closure are
     sized by the arrival-touched components, not the corpus."""
-    from oamap_spark.cache import track
-
     asg = _steady_cluster_assignment(spark, sf_dir)
     _, arrivals = steady_split(load_table(spark, sf_dir, "documents"))
     pairs = _steady_minhash_pairs(spark, sf_dir, arrivals)

@@ -27,7 +27,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oamap_spark.cache import release
 
 _ROOTS: list[str] = []
 
@@ -80,8 +79,6 @@ def staged_once(
             df = build()
             path = staging_path(f"oamap_steady_{name}_", name)
             df.write.parquet(path)
-            if df.is_cached:  # a cache.track'ed build is dead weight now
-                release(df)
             reader = _STAGED[key] = spark.read.parquet(path)
     return reader
 

@@ -25,7 +25,7 @@ import itertools
 import logging
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -373,63 +373,67 @@ def partition_ids(d: str, key: str, below: int | None = None) -> set[int]:
     return ids if below is None else {i for i in ids if i < below}
 
 
+def _present(col: str, index_dir: str) -> Column:
+    """``col`` with an in-plan guard against a null value: a read with
+    a given schema returns nulls for a column the file lacks, so an
+    index partition written before the ``(id, ids, sig)`` layout fails
+    here instead of silently yielding no pairs (the same fail-loud
+    convention as the null ``is_new`` guard)."""
+    msg = f"incremental dedup: a row of the index {index_dir} has no {col}"
+    return F.coalesce(F.col(col), F.raise_error(F.lit(msg))).alias(col)
+
+
 def incremental_dedup_batch_body(
     batch: DataFrame, batch_id: int, index_dir: str, pairs_dir: str
-) -> None:
+) -> DataFrame:
     """One micro-batch of the continuous-ingestion dedup loop —
     module-level so the replay-idempotency contract is directly
     testable (call it twice with the same batch_id: the second run
-    must leave both partitions byte-identical in content). See
+    must leave both partitions byte-identical in content). Returns a
+    reader over the written ``pairs/batch=<batch_id>`` partition. See
     :func:`foreach_batch_incremental_minhash` for the invariants."""
-    from oamap_spark.cache import release, track
     from oamap_spark.operators.dedup import (
-        flagged_shingle_ids_table,
         minhash_lsh_pairs_incremental,
+        shingle_ids_table,
         signature_table,
     )
 
     bspark = batch.sparkSession
-    ids = flagged_shingle_ids_table(batch, "doc_id", "text", n=3)
-    # ONE tracked arrival frame, signatures included: the probe's
-    # arrival half and the index write both read it, so arrivals are
-    # tokenized and minhashed once per micro-batch. The shingle
-    # table's own cache is dropped before anything fills it, and both
-    # frames leave the tracked registry here: nothing sweeps while a
-    # stream runs.
-    release(ids)
-    arr = track(signature_table(ids))
-    # batch < batch_id: a REPLAYED micro-batch (at-least-once
-    # foreachBatch) must not read its own first attempt's signatures
-    # back as corpus — duplicate ids would fan every verify-join pair
-    # out 2-4x in the rewritten partition. Only an index with no such
-    # batch starts empty (a listing, no read); reading an existing one
-    # raises on any failure — a silently-dropped index would re-emit
-    # nothing for true cross-batch dups.
-    idx_batches = partition_ids(index_dir, "batch", below=batch_id)
     _log.info(
         "incremental dedup batch %d: reading index batches %s of %s",
-        batch_id, sorted(idx_batches), index_dir,
+        batch_id, sorted(partition_ids(index_dir, "batch", below=batch_id)),
+        index_dir,
     )
-    ids_df = arr
-    if idx_batches:
-        ids_df = (
-            bspark.read.parquet(index_dir)
-            .where(F.col("batch") < batch_id)
-            .select("id", F.lit(False).alias("is_new"), "ids", "sig")
-            .unionByName(arr)
+    # INDEX FIRST: the one pass that tokenizes and minhashes the
+    # arrivals writes them as this batch's index partition, and the
+    # probe below reads only parquet, so no arrival frame is cached.
+    arr = signature_table(shingle_ids_table(batch, "doc_id", "text", n=3))
+    arr.write.mode("overwrite").parquet(os.path.join(index_dir, f"batch={batch_id}"))
+    # batch <= batch_id: a REPLAYED micro-batch (at-least-once
+    # foreachBatch) never reads a later batch, and its overwrite above
+    # replaced its own first attempt, so no id is read twice. The
+    # schema is the written frame's, so the read infers nothing (no
+    # footer job); is_new = (batch = batch_id) is a partition filter,
+    # so the probe side scans this batch's partition only. An
+    # unreadable earlier partition raises in the scan.
+    index_schema = StructType(arr.schema.fields + [StructField("batch", LongType())])
+    ids_df = (
+        bspark.read.schema(index_schema)
+        .parquet(index_dir)
+        .where(F.col("batch") <= batch_id)
+        .select(
+            "id",
+            (F.col("batch") == batch_id).alias("is_new"),
+            _present("ids", index_dir),
+            _present("sig", index_dir),
         )
+    )
     pairs = minhash_lsh_pairs_incremental(
         None, "doc_id", "text", "is_new", ids_df=ids_df
     )
-    # pairs BEFORE the index write: the pair plan reads the index dir
-    # and must not see this batch's own rows on the corpus side
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(pairs_dir, f"batch={batch_id}")
-    )
-    arr.select("id", "ids", "sig").write.mode("overwrite").parquet(
-        os.path.join(index_dir, f"batch={batch_id}")
-    )
-    release(arr)
+    out = os.path.join(pairs_dir, f"batch={batch_id}")
+    pairs.write.mode("overwrite").parquet(out)
+    return bspark.read.schema(pairs.schema).parquet(out)
 
 
 def foreach_batch_incremental_minhash(
@@ -439,11 +443,12 @@ def foreach_batch_incremental_minhash(
     micro-batch of documents is deduped against the ACCUMULATED corpus
     via the asymmetric incremental band join
     (operators/dedup.py:minhash_lsh_pairs_incremental), fed from a
-    persisted parquet signature index — the batch tokenizes and
-    minhashes ONLY its own documents; the corpus half is read back as
-    the (id, ids, sig) rows earlier batches wrote, so the probe bands
-    the stored signatures and no batch re-scans or re-hashes the
-    corpus.
+    persisted parquet signature index. Index first: the batch
+    tokenizes and minhashes ONLY its own documents, in the one pass
+    that writes them as its own (id, ids, sig) index partition; the
+    probe then reads the index partitions up to and including its own
+    (its own flagged new), so it bands stored signatures only and no
+    batch re-scans or re-hashes the corpus.
 
     Every near-dup pair is emitted exactly ONCE — in the micro-batch
     where its LATER member arrives (same-batch pairs once, by the
@@ -455,10 +460,15 @@ def foreach_batch_incremental_minhash(
     foreachBatch is at-least-once, so exactly-once must be engineered
     at the sink: both writes land in a deterministic per-batch
     subdirectory (``batch=<batch_id>``) with ``overwrite`` — a
-    replayed micro-batch rewrites its own partition instead of
-    double-appending pairs (or duplicating index rows, which would
-    multiply verify-join output). Readers see ``batch`` as a
-    discovered partition column and project it away."""
+    replayed micro-batch rewrites its own index partition (content-
+    identical) before its probe reads it, and then its own pairs
+    partition, instead of double-appending pairs or duplicating index
+    rows, which would multiply verify-join output. The probe reads
+    ``batch <= batch_id`` only, so a replay never sees a later batch.
+    A crash between the two writes leaves ``index/batch=<batch_id>``
+    without its pairs; the replay overwrites it and emits the same
+    pairs. Readers see ``batch`` as a partition column and project
+    it away."""
     def body(batch: DataFrame, batch_id: int) -> None:
         incremental_dedup_batch_body(batch, batch_id, index_dir, pairs_dir)
 
@@ -470,6 +480,12 @@ def foreach_batch_incremental_minhash(
             .start()
         )
         q.awaitTermination()
+
+
+#: The ``(node, cluster_id)`` layout of every assignment generation.
+ASSIGNMENT_SCHEMA = StructType(
+    [StructField(c, LongType()) for c in ("node", "cluster_id")]
+)
 
 
 def cluster_maintenance_batch_body(
@@ -493,43 +509,47 @@ def cluster_maintenance_batch_body(
     and idempotent on its inputs, so the rewrite is byte-equal in
     content. Module-level so the contract is directly testable.
 
-    Persisted-state guard: ``asg_dir`` and ``index_dir`` must both
-    hold state from batches below ``batch_id`` or both hold none. A
-    fresh assignment dir paired with an existing index would fold
-    against an empty assignment and silently drop every earlier
-    cluster; a fresh index beside an existing assignment would emit
-    no pair against the earlier corpus. Either raises
-    ``RuntimeError`` before anything is written."""
+    Persisted-state guard: below ``batch_id``, the latest generation
+    in ``asg_dir`` must be the latest index batch in ``index_dir``
+    (both none on a fresh stream). A fresh assignment dir paired with
+    an existing index would fold against an empty assignment and
+    silently drop every earlier cluster; a fresh index beside an
+    existing assignment would emit no pair against the earlier
+    corpus; an assignment that stops short of the index (a batch whose
+    index partition landed but whose fold did not, never replayed)
+    would drop that batch's pairs from every later generation. Each
+    raises ``RuntimeError`` before anything is written.
+
+    The pairs readback and the assignment read take their schemas
+    from the written pairs frame and :data:`ASSIGNMENT_SCHEMA`, so no
+    read infers one."""
     from oamap_spark.operators.clustering import (
         apply_components_update,
         local_frame,
     )
 
     gen = max(partition_ids(asg_dir, "gen", below=batch_id), default=None)
-    idx_batches = partition_ids(index_dir, "batch", below=batch_id)
-    if (gen is None) != (not idx_batches):
+    idx = max(partition_ids(index_dir, "batch", below=batch_id), default=None)
+    if gen != idx:
         raise RuntimeError(
             f"cluster maintenance batch {batch_id}: below it, {asg_dir} "
-            f"holds gen={gen} but {index_dir} holds index batches "
-            f"{sorted(idx_batches)}; one dir is fresh and the other is not"
+            f"ends at gen={gen} but {index_dir} ends at batch={idx}; the "
+            f"assignment and the index must end at the same batch"
         )
     _log.info(
         "cluster maintenance batch %d: reading gen=%s of %s",
         batch_id, gen, asg_dir,
     )
-    incremental_dedup_batch_body(batch, batch_id, index_dir, pairs_dir)
-    bspark = batch.sparkSession
-    pairs = bspark.read.parquet(
-        os.path.join(pairs_dir, f"batch={batch_id}")
+    pairs = incremental_dedup_batch_body(
+        batch, batch_id, index_dir, pairs_dir
     ).select("id_a", "id_b")
+    bspark = batch.sparkSession
     if gen is not None:
-        asg = bspark.read.parquet(os.path.join(asg_dir, f"gen={gen}"))
-    else:  # first batch: no prior state
-        asg = local_frame(
-            bspark,
-            StructType([StructField(c, LongType()) for c in ("node", "cluster_id")]),
-            [[], []],
+        asg = bspark.read.schema(ASSIGNMENT_SCHEMA).parquet(
+            os.path.join(asg_dir, f"gen={gen}")
         )
+    else:  # first batch: no prior state
+        asg = local_frame(bspark, ASSIGNMENT_SCHEMA, [[], []])
     apply_components_update(asg, pairs).write.mode("overwrite").parquet(
         os.path.join(asg_dir, f"gen={batch_id}")
     )

@@ -865,8 +865,9 @@ def test_incremental_null_flag_fails_loudly(spark):
 
 def test_flagged_ids_without_flag_column_marks_every_row_new(spark):
     """``new_col=None`` is how the batch detectors and the arrival half
-    of a steady or stream probe enter the one probe: every row is new,
-    the flag is the literal true, and no null guard rides the plan."""
+    of a steady probe enter the one probe: every row is new,
+    the flag is the literal true, and no null guard rides the plan.
+    The table comes back untracked."""
     from oamap_spark import cache
     from oamap_spark.operators.dedup import flagged_shingle_ids_table
     from oamap_spark.plans.audit import plan_string
@@ -875,8 +876,12 @@ def test_flagged_ids_without_flag_column_marks_every_row_new(spark):
         [(1, "some text here", True), (2, "other text there", False)],
         "doc_id long, text string, nw boolean",
     )
+    before = cache.tracked_count()
     every = flagged_shingle_ids_table(docs, "doc_id", "text")
     flagged = flagged_shingle_ids_table(docs, "doc_id", "text", "nw")
+    # untracked: a caller that reads the table more than once tracks it
+    assert not every.is_cached and not flagged.is_cached
+    assert cache.tracked_count() == before
     assert every.columns == flagged.columns == ["id", "is_new", "ids"]
     assert [r["is_new"] for r in every.orderBy("id").collect()] == [True, True]
     assert "raise_error" not in plan_string(every, "extended")
@@ -1189,8 +1194,13 @@ def test_cluster_maintenance_mismatched_state_dirs_raise(spark, tmp_path):
     index that already holds earlier batches must fail loudly before
     anything is written, not fold against an empty assignment and drop
     every earlier cluster; so must the mirror pairing, a fresh index
-    beside an existing assignment. Batch 0 on empty dirs still folds."""
-    from oamap_spark.streaming.pipelines import cluster_maintenance_batch_body
+    beside an existing assignment, and an assignment whose latest
+    generation stops short of the latest index batch. Batch 0 on empty
+    dirs still folds."""
+    from oamap_spark.streaming.pipelines import (
+        cluster_maintenance_batch_body,
+        incremental_dedup_batch_body,
+    )
 
     index_dir, pairs_dir = str(tmp_path / "index"), str(tmp_path / "pairs")
     asg_dir = str(tmp_path / "asg")
@@ -1207,6 +1217,86 @@ def test_cluster_maintenance_mismatched_state_dirs_raise(spark, tmp_path):
             )
         assert idx in str(err.value) and asg in str(err.value)
     assert not (tmp_path / "pairs" / "batch=1").exists()
+    # an assignment that stops short of the index: batch 1's index and
+    # pairs landed but its fold did not, and batch 2 arrives instead of
+    # the replay
+    incremental_dedup_batch_body(
+        _tiny_docs(spark, [3, 4]), 1, index_dir, pairs_dir
+    )
+    with pytest.raises(RuntimeError) as err:
+        cluster_maintenance_batch_body(
+            _tiny_docs(spark, [5, 6]), 2, index_dir, pairs_dir, asg_dir
+        )
+    assert index_dir in str(err.value) and asg_dir in str(err.value)
+    assert not (tmp_path / "index" / "batch=2").exists()
+    assert not (tmp_path / "pairs" / "batch=2").exists()
+
+
+def test_cluster_maintenance_replay_after_index_only_write(spark, tmp_path):
+    """The index partition is written first, so a crash can leave
+    ``index/batch=N`` without ``pairs/batch=N`` or ``gen=N``. Replaying
+    batch N from that state rewrites the index partition and emits the
+    same pairs and generation as the uninterrupted run."""
+    import shutil
+
+    from oamap_spark.streaming.pipelines import cluster_maintenance_batch_body
+
+    dirs = [str(tmp_path / x) for x in ("index", "pairs", "asg")]
+    batches = [_tiny_docs(spark, [1, 2]), _tiny_docs(spark, [3, 4])]
+    for i, b in enumerate(batches):
+        cluster_maintenance_batch_body(b, i, *dirs)
+
+    def state():
+        pairs = spark.read.parquet(f"{dirs[1]}/batch=1").collect()
+        gen = spark.read.parquet(f"{dirs[2]}/gen=1").collect()
+        return sorted(tuple(r) for r in pairs), sorted(tuple(r) for r in gen)
+
+    first = state()
+    assert first[0]  # non-vacuous: batch 1 pairs with batch 0
+    shutil.rmtree(f"{dirs[1]}/batch=1")
+    shutil.rmtree(f"{dirs[2]}/gen=1")
+    cluster_maintenance_batch_body(batches[1], 1, *dirs)
+    assert state() == first
+
+
+def test_cluster_maintenance_batch_job_count(spark, tmp_path):
+    """Counter, not wall time: folding a micro-batch runs a fixed number
+    of Spark jobs (every job is a driver round trip). The dedup body
+    writes the arrivals' index partition first and probes parquet read
+    with known schemas, so no read starts a schema-inference job and no
+    executed plan scans a cached frame."""
+    from oamap_spark.streaming.pipelines import cluster_maintenance_batch_body
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+    dirs = [str(tmp_path / x) for x in ("index", "pairs", "asg")]
+    cluster_maintenance_batch_body(_tiny_docs(spark, [1, 2]), 0, *dirs)
+    jsc.listenerBus().waitUntilEmpty()
+    n = store.executionsCount()
+    last = store.executionsList(n - 1, 1).head().executionId() if n else -1
+    group = f"cluster-maintenance-batch-1-{tmp_path.name}"
+    sc.setJobGroup(group, "fold batch 1")
+    try:
+        cluster_maintenance_batch_body(_tiny_docs(spark, [3, 4]), 1, *dirs)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 9, sorted(jobs)
+    plans, i, misses = [], last + 1, 0
+    while misses < 3:
+        e = store.execution(i)
+        if e.isDefined():
+            plans.append(e.get().physicalPlanDescription())
+            misses = 0
+        else:
+            misses += 1
+        i += 1
+    assert len(plans) >= 3  # index write, pairs write, fold
+    assert not [p for p in plans if "InMemoryRelation" in p or "InMemoryTableScan" in p]
 
 
 def test_cluster_maintenance_first_batch_equals_one_shot(spark, tmp_path):

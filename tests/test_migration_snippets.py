@@ -138,6 +138,7 @@ def test_snippet_temperature_mixture(spark):
 
 
 def test_snippet_all_signals_dedup(spark):
+    from oamap_spark.cache import track
     from oamap_spark.operators.clustering import (connected_components_min_id,
                                                   dedup_keepers)
     from oamap_spark.operators.dedup import (containment_pairs,
@@ -145,7 +146,7 @@ def test_snippet_all_signals_dedup(spark):
                                              shingle_ids_table)
 
     docs = _docs(spark)
-    sids = shingle_ids_table(docs, "doc_id", "text")
+    sids = track(shingle_ids_table(docs, "doc_id", "text"))
     edges = (minhash_lsh_pairs(docs, "doc_id", "text", ids_df=sids)
              .select("id_a", "id_b")
              .unionByName(containment_pairs(docs, "doc_id", "text",
@@ -245,6 +246,7 @@ def test_snippet_minhash_incremental(spark):
 
 
 def test_snippet_incremental_multi_detector_shared_ids(spark):
+    from oamap_spark.cache import track
     from oamap_spark.operators.dedup import (containment_pairs_incremental,
                                              flagged_shingle_ids_table,
                                              minhash_lsh_pairs_incremental)
@@ -252,7 +254,7 @@ def test_snippet_incremental_multi_detector_shared_ids(spark):
     docs = _docs(spark)
     flagged = docs.withColumn(
         "is_new", F.substring("source", 4, 10).cast("int") >= 10)
-    fids = flagged_shingle_ids_table(flagged, "doc_id", "text", "is_new")
+    fids = track(flagged_shingle_ids_table(flagged, "doc_id", "text", "is_new"))
     mh = minhash_lsh_pairs_incremental(
         flagged, "doc_id", "text", "is_new", threshold=0.8, ids_df=fids)
     ct = containment_pairs_incremental(
@@ -327,6 +329,7 @@ def test_snippet_layout_levers(spark, tmp_path):
 
 
 def test_snippet_steady_state_shared_index(spark, tmp_path):
+    from oamap_spark.cache import track
     from oamap_spark.operators.dedup import (
         containment_pairs_incremental,
         flagged_shingle_ids_table,
@@ -340,7 +343,7 @@ def test_snippet_steady_state_shared_index(spark, tmp_path):
     batch = docs.where(src_num >= 10)
     idx_path = str(tmp_path / "shingle_idx")
     shingle_ids_table(corpus, "doc_id", "text").write.parquet(idx_path)
-    arr = flagged_shingle_ids_table(batch, "doc_id", "text")  # every row new
+    arr = track(flagged_shingle_ids_table(batch, "doc_id", "text"))  # all new
     ids = (
         spark.read.parquet(idx_path)
         .select("id", F.lit(False).alias("is_new"), "ids")

@@ -394,3 +394,21 @@ def test_incremental_dedup_batch_unreadable_index_raises(spark, tmp_path):
         P.incremental_dedup_batch_body(
             arrivals, 1, str(index_dir), str(tmp_path / "pairs")
         )
+
+
+def test_incremental_dedup_batch_pre_sig_index_raises(spark, tmp_path):
+    """The probe reads the index with the written partition's schema,
+    which fills a column a file lacks with nulls: an index partition
+    from before the ``(id, ids, sig)`` layout raises in-plan instead of
+    silently yielding no pairs against it."""
+    index_dir = tmp_path / "index"
+    spark.createDataFrame(
+        [(1, [11, 22, 33])], "id long, ids array<bigint>"
+    ).write.parquet(str(index_dir / "batch=0"))
+    arrivals = spark.createDataFrame(
+        [(2, "a b c d"), (3, "a b c e")], "doc_id long, text string"
+    )
+    with pytest.raises(Exception, match=f"index {index_dir} has no sig"):
+        P.incremental_dedup_batch_body(
+            arrivals, 1, str(index_dir), str(tmp_path / "pairs")
+        )
